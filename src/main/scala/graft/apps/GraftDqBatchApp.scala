@@ -28,7 +28,7 @@ object GraftDqBatchApp {
         // session-build failure (e.g. no master and no --local, no host
         // session to share) is a configuration error — exit 2, never an
         // uncaught crash (ADVICE r5)
-        val spark = try buildSession(opts, "graft-dq-batch") catch {
+        val (spark, owned) = try buildSession(opts, "graft-dq-batch") catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"cannot build spark session: ${e.getMessage}")
             return 2
@@ -62,7 +62,7 @@ object GraftDqBatchApp {
             System.err.println(s"graft DQ batch job failed: ${e.getMessage}")
             1
         } finally {
-          if (!opts.shared) spark.stop()
+          if (owned) spark.stop()
         }
     }
 
@@ -70,8 +70,13 @@ object GraftDqBatchApp {
     * `.config(...)`, because getOrCreate APPLIES modifiable SQL confs
     * (session timezone, AQE) to an already-existing session, silently
     * shifting the host's own timestamps. Standalone runs get the scale
-    * defaults this engine assumes (UTC, AQE on). */
-  private[apps] def buildSession(opts: CliOptions, appName: String): SparkSession = {
+    * defaults this engine assumes (UTC, AQE on).
+    *
+    * Returns the session and whether it is the app's own: true unless a
+    * host session was shared. The app stops its own session when it ends
+    * and never a host's. */
+  private[apps] def buildSession(opts: CliOptions,
+      appName: String): (SparkSession, Boolean) = {
     // --shared reuses the HOST's session when one exists; with no host
     // session there is nothing to share, so fall through to the standalone
     // build (where --local supplies the master, restoring the pre-r5
@@ -81,7 +86,7 @@ object GraftDqBatchApp {
     if (opts.shared) {
       val host = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       host match {
-        case Some(s) => return s
+        case Some(s) => return (s, false)
         case None => // no host session — build one below
       }
     }
@@ -96,6 +101,6 @@ object GraftDqBatchApp {
     catch { case _: IllegalArgumentException =>
       System.err.println(s"ignoring unknown log level '${opts.verbosity}'")
     }
-    spark
+    (spark, true)
   }
 }

@@ -21,7 +21,7 @@ object GraftDqStreamApp {
       case Left(err) =>
         System.err.println(err); System.err.println(CliOptions.usage); 2
       case Right(opts) =>
-        val spark = try GraftDqBatchApp.buildSession(opts, "graft-dq-stream") catch {
+        val (spark, owned) = try GraftDqBatchApp.buildSession(opts, "graft-dq-stream") catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"cannot build spark session: ${e.getMessage}")
             return 2
@@ -49,7 +49,7 @@ object GraftDqStreamApp {
               1
           }
         } finally {
-          if (!opts.shared) spark.stop()
+          if (owned) spark.stop()
         }
     }
 }

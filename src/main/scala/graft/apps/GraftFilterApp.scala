@@ -75,7 +75,7 @@ object GraftFilterApp {
       case Left(err) =>
         System.err.println(err); System.err.println(CliOptions.usage); 2
       case Right(opts) =>
-        val spark = try GraftDqBatchApp.buildSession(opts, "graft-quality-filter") catch {
+        val (spark, owned) = try GraftDqBatchApp.buildSession(opts, "graft-quality-filter") catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"cannot build spark session: ${e.getMessage}")
             return 2
@@ -114,7 +114,7 @@ object GraftFilterApp {
             System.err.println(s"graft filter job failed: ${e.getMessage}")
             1
         } finally {
-          if (!opts.shared) spark.stop()
+          if (owned) spark.stop()
         }
     }
 }

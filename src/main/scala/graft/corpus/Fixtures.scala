@@ -124,7 +124,7 @@ object Fixtures {
 
   final case class ExpectedKnPpl(doc_id: Long, trained_ppl: Double)
 
-  final case class ExpectedKnLangPpl(doc_id: Long, lang: String, lang_ppl: Double)
+  final case class ExpectedKnLangPpl(doc_id: Long, lang: String, lang_ppl: Option[Double])
 
   /** Same rounding as Spark's `round(col, 6)` on doubles (HALF_UP via
     * BigDecimal.valueOf) — both sides round bit-identical inputs, so the
@@ -343,7 +343,9 @@ object Fixtures {
 
   /** Straight-line mirror of `TextAnalysis.trainKnByLang` + per-doc
     * own-language perplexity (same per-lang count tables, same
-    * knFromTriCounts derivation, same walk). */
+    * knFromTriCounts derivation, same walk). A null language trains its
+    * own model, and a null-language doc scores null, as in
+    * `pplWithByLang`. */
   def trainKnByLangPpl(docs: Seq[(Long, String, String)]): Seq[ExpectedKnLangPpl] = {
     import graft.textmodel.LangModel
     val byLang = docs.groupBy(_._2)
@@ -361,7 +363,8 @@ object Fixtures {
       lang -> LangModel.knFromTriCounts(counts.iterator)
     }
     docs.map { case (id, lang, t) =>
-      ExpectedKnLangPpl(id, lang, round6(models(lang).perplexity(t)))
+      ExpectedKnLangPpl(id, lang,
+        Option(lang).map(l => round6(models(l).perplexity(t))))
     }.sortBy(_.doc_id)
   }
 

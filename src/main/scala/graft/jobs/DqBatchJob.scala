@@ -8,6 +8,7 @@ import graft.checks._
 import graft.metrics._
 import graft.sources.Source
 import graft.storage.DqStorage
+import graft.util.Concurrently
 
 /** Check-failure tolerance — how check failures affect the job's final
   * status (reference: config enum + dispatch at context/DQJob.scala:279-330,
@@ -35,8 +36,18 @@ final case class JobResult(
 /** Batch DQ job lifecycle — the reference's processAll pipeline
   * (context/DQJob.scala:590-643) re-expressed: load checks → fused regular
   * metrics per source → trend metrics (storage history) → composed metrics
-  * (driver formula) → checks → persist. Only the metric step touches
-  * executors; everything else is driver-side on 1-row results.
+  * (driver formula) → checks → persist. Only the metric and persist steps
+  * touch executors; everything else is driver-side on 1-row results.
+  *
+  * Concurrency: sources are processed one after another, but within a
+  * source the fused row pass and every grouping set's job run at once
+  * ([[MetricProcessor.process]]), and the persist step runs `saveMetrics`,
+  * `saveMetricErrors`, `saveChecks` and `saveJobState` at once. Both go
+  * through [[graft.util.Concurrently]]: at most `defaultParallelism` jobs
+  * at a time, each carrying the caller's job group and description, the
+  * first failure rethrown once the others have finished. Results keep the
+  * sequential order. A [[graft.storage.DqStorage]] must therefore accept
+  * concurrent saves.
   */
 final class DqBatchJob(
     spark: SparkSession,
@@ -103,13 +114,15 @@ final class DqBatchJob(
 
     // 6. persist — check results carry their criticality (ref V1.7),
     // capped error dumps become queryable history (ref V1.4)
+    // — four independent writes, run at once
     storage.foreach { st =>
-      st.saveMetrics(jobId, referenceTs, allMetrics)
-      st.saveMetricErrors(jobId, referenceTs, allMetrics)
-      st.saveChecks(jobId, referenceTs,
-        loadResults ++ checkResults.map { case (r, crit) =>
-          r.copy(critical = crit) })
-      jobState.foreach(cfg => st.saveJobState(jobId, referenceTs, cfg))
+      Concurrently(spark)(Seq(
+        () => st.saveMetrics(jobId, referenceTs, allMetrics),
+        () => st.saveMetricErrors(jobId, referenceTs, allMetrics),
+        () => st.saveChecks(jobId, referenceTs,
+          loadResults ++ checkResults.map { case (r, crit) =>
+            r.copy(critical = crit) })) ++
+        jobState.map(cfg => () => st.saveJobState(jobId, referenceTs, cfg)))
     }
 
     val failedLoad = loadResults.exists(!_.status)

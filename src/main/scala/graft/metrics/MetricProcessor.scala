@@ -17,6 +17,10 @@ import graft.functions.api.collect_list_limit
   *    that makes a 40-metric suite run at ~1 scan's cost at 100 TB.
   *  - Grouping metrics are batched by grouping-column set: one shuffle per
   *    distinct column set, shared by every metric that groups on it.
+  *  - [[process]] runs the fused pass and every grouping set's job at once
+  *    (bounded by `defaultParallelism`), so single-task final stages and
+  *    driver-side planning of one job overlap the others; result order is
+  *    the same as running them one after another.
   *  - Error dumps are bounded by `errorDumpSize` via `collect_list_limit`
   *    (never an unbounded collect_list), so executor memory stays constant.
   *
@@ -130,52 +134,73 @@ object MetricProcessor {
   def processGroupingMetrics(
       df: DataFrame,
       metrics: Seq[GroupingMetric],
-      cfg: Config = Config()): Seq[MetricResult] = {
-    metrics.groupBy(_.columns).toSeq.flatMap { case (gcols, ms) =>
-      val norm = normExpr(cfg) _
-      val anyErrors = ms.exists(_.errorCondition.nonEmpty)
-      // re-alias the per-group aggregate to the NORMALIZED "<id>_grp" name:
-      // norm() lowercases the UnresolvedAttribute references inside
-      // finalResult/errorCondition but not Alias nodes, so a mixed-case
-      // metric id under a caseSensitive=true host session would otherwise
-      // leave the alias "MyId_grp" unresolvable from the lowered "myid_grp"
-      val groupAggs = ms.map(m =>
-        norm(m.groupResult).as(normName(cfg)(m.id) + "_grp")) ++
-        (if (anyErrors)
-          Seq(graft.functions.api.collect_list_limit(
-            rowData(cfg, gcols), cfg.errorDumpSize).as("__grp_rows"))
-        else Nil)
-      val grouped = normalized(df, cfg)
-        .groupBy(gcols.map(c => col(normName(cfg)(c))): _*)
-        .agg(groupAggs.head, groupAggs.tail: _*)
-      val finals: Seq[Column] = ms.flatMap { m =>
-        val res = norm(m.finalResult).as(m.id)
-        val err = m.errorCondition.map { cond =>
-          graft.functions.api.merge_list_limit(
-            when(norm(cond), col("__grp_rows")),
-            cfg.errorDumpSize).as(errName(m.id))
-        }
-        res +: err.toSeq
+      cfg: Config = Config()): Seq[MetricResult] =
+    byColumnSet(metrics).flatMap(processGroupingSet(df, _, cfg))
+
+  /** Grouping metrics batched by grouping-column set, in the order
+    * [[processGroupingMetrics]] reports them. */
+  private def byColumnSet(metrics: Seq[GroupingMetric]): Seq[Seq[GroupingMetric]] =
+    metrics.groupBy(_.columns).values.toSeq
+
+  /** One job for grouping metrics that share one grouping-column set. */
+  private def processGroupingSet(
+      df: DataFrame,
+      ms: Seq[GroupingMetric],
+      cfg: Config): Seq[MetricResult] = {
+    val gcols = ms.head.columns
+    val norm = normExpr(cfg) _
+    val anyErrors = ms.exists(_.errorCondition.nonEmpty)
+    // re-alias the per-group aggregate to the NORMALIZED "<id>_grp" name:
+    // norm() lowercases the UnresolvedAttribute references inside
+    // finalResult/errorCondition but not Alias nodes, so a mixed-case
+    // metric id under a caseSensitive=true host session would otherwise
+    // leave the alias "MyId_grp" unresolvable from the lowered "myid_grp"
+    val groupAggs = ms.map(m =>
+      norm(m.groupResult).as(normName(cfg)(m.id) + "_grp")) ++
+      (if (anyErrors)
+        Seq(graft.functions.api.collect_list_limit(
+          rowData(cfg, gcols), cfg.errorDumpSize).as("__grp_rows"))
+      else Nil)
+    val grouped = normalized(df, cfg)
+      .groupBy(gcols.map(c => col(normName(cfg)(c))): _*)
+      .agg(groupAggs.head, groupAggs.tail: _*)
+    val finals: Seq[Column] = ms.flatMap { m =>
+      val res = norm(m.finalResult).as(m.id)
+      val err = m.errorCondition.map { cond =>
+        graft.functions.api.merge_list_limit(
+          when(norm(cond), col("__grp_rows")),
+          cfg.errorDumpSize).as(errName(m.id))
       }
-      val row: Row = grouped.select(finals: _*).collect().head
-      ms.map { m =>
-        val (value, additional) = m.decode(row.getAs[Any](m.id))
-        val errors = m.errorCondition
-          .map(_ => decodeErrors(row.getAs[Any](errName(m.id))))
-          .getOrElse(Nil)
-        MetricResult(m.id, m.name, cfg.sourceId, m.columns, value, additional, errors)
-      }
+      res +: err.toSeq
+    }
+    val row: Row = grouped.select(finals: _*).collect().head
+    ms.map { m =>
+      val (value, additional) = m.decode(row.getAs[Any](m.id))
+      val errors = m.errorCondition
+        .map(_ => decodeErrors(row.getAs[Any](errName(m.id))))
+        .getOrElse(Nil)
+      MetricResult(m.id, m.name, cfg.sourceId, m.columns, value, additional, errors)
     }
   }
 
-  /** Full suite: fused single-pass job + one job per grouping-column set. */
+  /** Full suite: fused single-pass job + one job per grouping-column set.
+    *
+    * The jobs are independent, so they run at once through
+    * [[graft.util.Concurrently]] (at most `defaultParallelism` at a time,
+    * each carrying the caller's job group and description). The fused pass
+    * is submitted first, as it is the longest. Results come back in the
+    * same order as [[processRowMetrics]] followed by
+    * [[processGroupingMetrics]]: row metrics in input order, then grouping
+    * metrics by column set. */
   def process(
       df: DataFrame,
       rowMetrics: Seq[RowMetric],
       groupingMetrics: Seq[GroupingMetric] = Nil,
       cfg: Config = Config()): Seq[MetricResult] =
-    processRowMetrics(df, rowMetrics, cfg) ++
-      processGroupingMetrics(df, groupingMetrics, cfg)
+    graft.util.Concurrently(df.sparkSession)(
+      (() => processRowMetrics(df, rowMetrics, cfg)) +:
+        byColumnSet(groupingMetrics).map(ms => () => processGroupingSet(df, ms, cfg))
+    ).flatten
 
   /** The fused single-pass plan as a 1-row DataFrame (no collect) — for
     * plan inspection, `Verify` dumps and pipelines that keep results

@@ -3,13 +3,15 @@ package graft.metrics
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.TryCastDouble
+
 /** MIN_NUMBER / MAX_NUMBER over columns cast to double
   * (ref: BasicNumericDFMetrics.scala:169-252). */
 final case class NumberExtremeMetric(id: String, columns: Seq[String],
     isMax: Boolean) extends RowMetric {
   val name: String = if (isMax) "MAX_NUMBER" else "MIN_NUMBER"
   def result: Column = {
-    val casts = columns.map(n => col(n).try_cast("double"))
+    val casts = columns.map(n => TryCastDouble(col(n)))
     val rowExtreme =
       if (casts.size == 1) casts.head
       else if (isMax) greatest(casts: _*)
@@ -22,7 +24,7 @@ final case class NumberExtremeMetric(id: String, columns: Seq[String],
 final case class SumNumberMetric(id: String, columns: Seq[String]) extends RowMetric {
   val name = "SUM_NUMBER"
   def result: Column =
-    sum(columns.map(n => coalesce(col(n).try_cast("double"), lit(0.0))).reduce(_ + _))
+    sum(columns.map(n => coalesce(TryCastDouble(col(n)), lit(0.0))).reduce(_ + _))
       .cast("double").as(id)
 }
 
@@ -30,20 +32,20 @@ final case class SumNumberMetric(id: String, columns: Seq[String]) extends RowMe
 final case class AvgNumberMetric(id: String, column: String) extends RowMetric {
   val name = "AVG_NUMBER"
   val columns = Seq(column)
-  def result: Column = avg(col(column).try_cast("double")).as(id)
+  def result: Column = avg(TryCastDouble(col(column))).as(id)
 }
 
 /** STD_NUMBER — population stddev, single column (ref: :365-403). */
 final case class StdNumberMetric(id: String, column: String) extends RowMetric {
   val name = "STD_NUMBER"
   val columns = Seq(column)
-  def result: Column = stddev_pop(col(column).try_cast("double")).as(id)
+  def result: Column = stddev_pop(TryCastDouble(col(column))).as(id)
 }
 
 /** CASTED_NUMBER — count of values castable to double (ref: :458-485). */
 final case class CastedNumberMetric(id: String, columns: Seq[String]) extends ConditionalMetric {
   val name = "CASTED_NUMBER"
-  protected def cond(c: Column): Column = c.try_cast("double").isNotNull
+  protected def cond(c: Column): Column = TryCastDouble(c).isNotNull
 }
 
 /** FORMATTED_NUMBER — count of numbers that fit (or don't, `outbound`) within
@@ -55,7 +57,7 @@ final case class FormattedNumberMetric(id: String, columns: Seq[String],
     precision: Int, scale: Int, outbound: Boolean = false) extends ConditionalMetric {
   val name = "FORMATTED_NUMBER"
   protected def cond(c: Column): Column = {
-    val d = c.try_cast("double")
+    val d = TryCastDouble(c)
     val fits = d.isNotNull &&
       abs(d) < math.pow(10, (precision - scale).toDouble) &&
       d === round(d, scale)
@@ -68,8 +70,8 @@ final case class NumberDomainMetric(id: String, columns: Seq[String],
     domain: Set[Double], outbound: Boolean = false) extends ConditionalMetric {
   val name: String = if (outbound) "NUMBER_OUT_DOMAIN" else "NUMBER_IN_DOMAIN"
   protected def cond(c: Column): Column = {
-    val in = c.try_cast("double").isInCollection(domain)
-    if (outbound) c.try_cast("double").isNotNull && !in else in
+    val in = TryCastDouble(c).isInCollection(domain)
+    if (outbound) TryCastDouble(c).isNotNull && !in else in
   }
 }
 
@@ -77,7 +79,7 @@ final case class NumberDomainMetric(id: String, columns: Seq[String],
 final case class NumberValuesMetric(id: String, columns: Seq[String],
     compareValue: Double) extends ConditionalMetric {
   val name = "NUMBER_VALUES"
-  protected def cond(c: Column): Column = c.try_cast("double") === lit(compareValue)
+  protected def cond(c: Column): Column = TryCastDouble(c) === lit(compareValue)
 }
 
 /** NUMBER_LESS_THAN / NUMBER_GREATER_THAN with inclusive-bound option
@@ -87,7 +89,7 @@ final case class NumberCompareMetric(id: String, columns: Seq[String],
   extends ConditionalMetric {
   val name: String = if (greater) "NUMBER_GREATER_THAN" else "NUMBER_LESS_THAN"
   protected def cond(c: Column): Column = {
-    val d = c.try_cast("double")
+    val d = TryCastDouble(c)
     (greater, includeBound) match {
       case (true, true)   => d >= compareValue
       case (true, false)  => d > compareValue
@@ -103,7 +105,7 @@ final case class NumberBetweenMetric(id: String, columns: Seq[String],
     lower: Double, upper: Double, negate: Boolean = false) extends ConditionalMetric {
   val name: String = if (negate) "NUMBER_NOT_BETWEEN" else "NUMBER_BETWEEN"
   protected def cond(c: Column): Column = {
-    val d = c.try_cast("double")
+    val d = TryCastDouble(c)
     val in = d >= lower && d <= upper
     if (negate) d.isNotNull && !in else in
   }
@@ -126,7 +128,7 @@ final case class QuantileMetric(id: String, column: String, quantile: Double,
   }
   val columns = Seq(column)
   def result: Column =
-    percentile_approx(col(column).try_cast("double"), lit(quantile), lit(accuracy))
+    percentile_approx(TryCastDouble(col(column)), lit(quantile), lit(accuracy))
       .cast("double").as(id)
 }
 
@@ -138,7 +140,7 @@ final case class PercentileAtValueMetric(id: String, column: String,
   val name = "GET_PERCENTILE"
   val columns = Seq(column)
   def result: Column = {
-    val d = col(column).try_cast("double")
+    val d = TryCastDouble(col(column))
     try_divide(
       sum(when(d <= value, 1L).otherwise(0L)),
       sum(when(d.isNotNull, 1L).otherwise(0L))).cast("double").as(id)

@@ -211,7 +211,14 @@ object Similarity {
     * intrinsically hard for hyperplane LSH: at s ~= 0.5 (p ~= 0.67), recall
     * 0.99 needs planes=6, tables=48 — the default here, matching the
     * oracle-checked query contract (tau=0.5); at production scale, raise tau
-    * or planes before raising tables. */
+    * or planes before raising tables.
+    *
+    * With the default `estimatePreFilter = true` precision stays 1 but the
+    * verify step is no longer exact at the boundary: a 252-bit signature
+    * estimate drops candidates before the exact dot product, and it misses
+    * a pair at exactly tau with p ≈ 3e-4 (3.5 sigma), less the further the
+    * pair is above tau. Pass `estimatePreFilter = false` for recall equal
+    * to the LSH bound above. */
   def cosineLshPairs(df: DataFrame, idCol: String, vecCol: String,
       dims: Int, tau: Double, planes: Int = 6, tables: Int = 48,
       estimatePreFilter: Boolean = true): DataFrame = {

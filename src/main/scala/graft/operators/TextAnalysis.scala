@@ -274,13 +274,17 @@ object TextAnalysis {
         .agg(count(lit(1)).as("n"))
         .where(col("n") > maxTypesPerLang)
         .select(col("lang")).collect().map(_.getString(0)).toSet
+      // null-safe membership: a null `lang` is a language of its own, so
+      // its rows take exactly one of the two legs below
+      val isOver = coalesce(col("lang").isInCollection(overCap - null), lit(false)) ||
+        (col("lang").isNull && lit(overCap.contains(null)))
       val under =
         (if (overCap.isEmpty) counts
-        else counts.filter(!col("lang").isInCollection(overCap))).collect()
+        else counts.filter(!isOver)).collect()
       val ranked =
         if (overCap.isEmpty) Array.empty[org.apache.spark.sql.Row]
         else counts
-          .filter(col("lang").isInCollection(overCap))
+          .filter(isOver)
           .groupBy(col("lang"))
           .agg(graft.functions.api.top_k_pairs(
             col("c").cast("double"), col("k"), maxTypesPerLang).as("tk"))

@@ -17,6 +17,10 @@ import graft.metrics.{HistoryPoint, MetricResult}
   * the schema mirrors the reference's Slick model). History reads filter on
   * (metric_id, reference_ts) which partition pruning and predicate pushdown
   * keep cheap regardless of total history size.
+  *
+  * Thread safety: implementations must accept concurrent calls from
+  * different threads. [[graft.jobs.DqBatchJob]] runs `saveMetrics`,
+  * `saveMetricErrors`, `saveChecks` and `saveJobState` of one run at once.
   */
 trait DqStorage {
   def saveMetrics(jobId: String, referenceTs: Instant, results: Seq[MetricResult]): Unit

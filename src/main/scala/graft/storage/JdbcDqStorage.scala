@@ -20,6 +20,11 @@ import graft.metrics.{HistoryPoint, MetricResult}
   *
   * Driver-side by design — results are O(#metrics) rows per run, exactly like
   * the reference's storage managers.
+  *
+  * Thread safety: one `Connection` with autocommit off carries every
+  * call, and each call ends in its own commit, so interleaved calls would
+  * commit or roll back each other's rows. Every public method therefore
+  * holds the connection's lock for its whole transaction.
   */
 final class JdbcDqStorage(url: String,
     props: java.util.Properties = new java.util.Properties(),
@@ -34,7 +39,7 @@ final class JdbcDqStorage(url: String,
   migrate()
 
   /** Applied-migration ledger, read back for tests/ops. */
-  def appliedVersions: Seq[Int] = {
+  def appliedVersions: Seq[Int] = locked {
     val s = conn.createStatement()
     try {
       val rs = s.executeQuery(
@@ -55,6 +60,8 @@ final class JdbcDqStorage(url: String,
     * applied without ever creating this schema's result tables. Drivers
     * predating JDBC 4.1 `getSchema` (AbstractMethodError) fall back to the
     * unscoped scan — the pre-4.1 behavior, no worse than before. */
+  private def locked[T](body: => T): T = conn.synchronized(body)
+
   private def tableExists(table: String): Boolean = {
     val md = conn.getMetaData
     val cat = try Option(conn.getCatalog) catch { case _: Throwable => None }
@@ -107,7 +114,7 @@ final class JdbcDqStorage(url: String,
   }
 
   override def saveMetrics(jobId: String, referenceTs: Instant,
-      results: Seq[MetricResult]): Unit = {
+      results: Seq[MetricResult]): Unit = locked {
     val ps = conn.prepareStatement(
       """INSERT INTO results_metrics
          (job_id, metric_id, metric_name, source_id, columns, result,
@@ -133,7 +140,7 @@ final class JdbcDqStorage(url: String,
   }
 
   override def saveChecks(jobId: String, referenceTs: Instant,
-      checks: Seq[CheckResult]): Unit = {
+      checks: Seq[CheckResult]): Unit = locked {
     // explicit column list: is_critical arrived in migration 3, so the
     // insert must not depend on physical column order
     val ps = conn.prepareStatement(
@@ -162,7 +169,7 @@ final class JdbcDqStorage(url: String,
   }
 
   override def saveMetricErrors(jobId: String, referenceTs: Instant,
-      results: Seq[MetricResult]): Unit = {
+      results: Seq[MetricResult]): Unit = locked {
     val ps = conn.prepareStatement(
       """INSERT INTO results_metric_errors
          (job_id, metric_id, row_data, error_hash, reference_ts)
@@ -182,7 +189,7 @@ final class JdbcDqStorage(url: String,
   }
 
   override def metricErrors(jobId: String, metricId: String,
-      before: Instant): Seq[String] = {
+      before: Instant): Seq[String] = locked {
     val ps = conn.prepareStatement(
       """SELECT row_data FROM results_metric_errors
          WHERE job_id = ? AND metric_id = ? AND reference_ts < ?
@@ -200,7 +207,7 @@ final class JdbcDqStorage(url: String,
   }
 
   override def metricHistory(jobId: String, metricId: String,
-      before: Instant): Seq[HistoryPoint] = {
+      before: Instant): Seq[HistoryPoint] = locked {
     val ps = conn.prepareStatement(
       """SELECT reference_ts, result FROM results_metrics
          WHERE job_id = ? AND metric_id = ? AND reference_ts < ?
@@ -220,7 +227,7 @@ final class JdbcDqStorage(url: String,
   }
 
   override def saveJobState(jobId: String, referenceTs: Instant,
-      config: String): Unit = {
+      config: String): Unit = locked {
     val ps = conn.prepareStatement(
       "INSERT INTO job_state VALUES (?,?,?,?)")
     try {
@@ -233,7 +240,8 @@ final class JdbcDqStorage(url: String,
     } finally ps.close()
   }
 
-  override def latestJobState(jobId: String, at: Instant): Option[String] = {
+  override def latestJobState(jobId: String,
+      at: Instant): Option[String] = locked {
     val ps = conn.prepareStatement(
       """SELECT config FROM job_state
          WHERE job_id = ? AND reference_ts <= ?
@@ -248,7 +256,7 @@ final class JdbcDqStorage(url: String,
     } finally ps.close()
   }
 
-  override def close(): Unit = {
+  override def close(): Unit = locked {
     try conn.rollback() catch { case _: java.sql.SQLException => }
     conn.close()
   }

@@ -2,6 +2,8 @@ package graft.apps
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -246,8 +248,9 @@ class AppsSpec extends AnyFunSuite with Matchers {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val opts = CliOptions.parse(Array("-j", "x.conf", "-s")).toOption.get
-      val s = GraftDqBatchApp.buildSession(opts, "graft-test")
+      val (s, owned) = GraftDqBatchApp.buildSession(opts, "graft-test")
       (s should be).theSameInstanceAs(spark)
+      owned shouldBe false // the app never stops a host's session
       // the standalone defaults (UTC, AQE on) must NOT leak onto the host:
       // getOrCreate applies .config(...) values to an existing session
       s.conf.get("spark.sql.session.timeZone") shouldBe "America/New_York"
@@ -256,5 +259,43 @@ class AppsSpec extends AnyFunSuite with Matchers {
       spark.conf.set("spark.sql.session.timeZone", prevTz)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
+  }
+
+  test("the app stops a session it built and never a shared host's") {
+    // host session shared: it survives the run
+    GraftDqBatchApp.run(Array("-j", "/no/such.conf", "-s")) shouldBe 2
+    spark.sparkContext.isStopped shouldBe false
+    // no host session: the app builds one and must stop it. A JVM runs one
+    // SparkContext, so this case runs in a child JVM.
+    val out = Files.createTempFile("graft-owned", ".out").toFile
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(a => a.startsWith("-Xm") ||
+        a.startsWith("-agentlib") || a.startsWith("-javaagent"))
+    val cmd = Seq(java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString) ++
+      jvmArgs ++ Seq("-Xmx1g", "-cp", sys.props("java.class.path"),
+        "graft.apps.OwnedSessionMain")
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      .redirectOutput(out).start()
+    val finished = p.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
+    if (!finished) p.destroyForcibly()
+    val lines = scala.io.Source.fromFile(out).getLines().toSeq
+    withClue(lines.takeRight(20).mkString("\n")) {
+      finished shouldBe true
+      lines.filter(_.startsWith("rc=")) shouldBe Seq("rc=2 live=false")
+    }
+  }
+}
+
+/** Child-JVM half of the session-ownership spec: `--shared` with no host
+  * session, so the app builds its own; afterwards no live session may be
+  * left behind. */
+object OwnedSessionMain {
+  def main(args: Array[String]): Unit = {
+    import org.apache.spark.sql.SparkSession
+    val rc = GraftDqBatchApp.run(Array("-j", "/no/such.conf", "-s", "-l"))
+    val live = Seq(SparkSession.getActiveSession, SparkSession.getDefaultSession)
+      .flatten.exists(!_.sparkContext.isStopped)
+    println(s"rc=$rc live=$live")
+    sys.exit(0)
   }
 }

@@ -3,6 +3,8 @@ package graft.jobs
 import java.nio.file.Files
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -118,5 +120,141 @@ class DqBatchJobSpec extends AnyFunSuite with Matchers {
       rowMetrics = Map("lineitem" -> Seq(RowCountMetric("rows"))),
       checks = Seq(CheckSpec(LessThanCheck("bad", "rows", threshold = Some(1.0)))),
       tolerance = Tolerance.None).run().passed shouldBe true
+  }
+
+  // ── concurrent metric jobs and storage writes ──────────────────────────
+
+  private val concRows: Seq[RowMetric] = Seq(
+    RowCountMetric("rows"), AvgNumberMetric("avg_qty", "l_quantity"),
+    CastedNumberMetric("flag_num", Seq("l_returnflag")))
+  private val concGroups: Seq[GroupingMetric] = Seq(
+    DistinctValuesMetric("flags", Seq("l_returnflag")),
+    DuplicateValuesMetric("dup_orders", Seq("l_orderkey")),
+    DistinctValuesMetric("flag_status", Seq("l_returnflag", "l_linestatus")),
+    DuplicateValuesMetric("dup_flags", Seq("l_returnflag")))
+
+  private def concJob(id: String, storage: Option[graft.storage.DqStorage],
+      groups: Seq[GroupingMetric] = concGroups) = new DqBatchJob(
+    spark, id, Seq(src),
+    rowMetrics = Map("lineitem" -> concRows),
+    groupingMetrics = Map("lineitem" -> groups),
+    checks = Seq(CheckSpec(GreaterThanCheck("ck_rows", "rows", threshold = Some(1.0)))),
+    storage = storage, errorDumpSize = 10000, jobState = Some("{}"))
+
+  /** The sequential calls the job's metric step replaces. */
+  private lazy val sequential: Seq[MetricResult] = {
+    val cfg = MetricProcessor.Config("lineitem", Nil, 10000)
+    MetricProcessor.processRowMetrics(src.df, concRows, cfg) ++
+      MetricProcessor.processGroupingMetrics(src.df, concGroups, cfg)
+  }
+
+  /** ids, values and order exactly; error dumps as multisets (a dump holds
+    * every failing row here, but Spark does not fix the order it merges
+    * partial aggregates in). */
+  private def sameResults(got: Seq[MetricResult], want: Seq[MetricResult]): Unit = {
+    got.map(_.metricId) shouldBe want.map(_.metricId)
+    got.map(_.value) shouldBe want.map(_.value)
+    got.map(_.errors.map(_.mkString("|")).sorted) shouldBe
+      want.map(_.errors.map(_.mkString("|")).sorted)
+    got.map(_.errors.size).sum should be > 0
+  }
+
+  test("concurrent metric jobs return what the sequential calls return, in order") {
+    val r = concJob("conc", None).run(Instant.parse("2026-08-01T00:00:00Z"))
+    sameResults(r.metrics, sequential)
+    r.passed shouldBe true
+  }
+
+  test("every job of a run carries the caller's job group and description") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("sql.streaming.queryId") == null)
+          seen.add(e.properties)
+    }
+    val dir = Files.createTempDirectory("graft-dq-group").toString
+    // listener events arrive in order, so the jobs between two marker
+    // jobs are exactly the run's, and all of them are delivered once the
+    // second marker is seen
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try sc.parallelize(1 to 2, 1).count() finally sc.clearJobGroup()
+    }
+    def group(p: java.util.Properties) = p.getProperty("spark.jobGroup.id")
+    sc.addSparkListener(listener)
+    try {
+      marker("before")
+      sc.setJobGroup("dq-group", "dq run under test")
+      try concJob("grp", Some(new ParquetDqStorage(spark, dir))).run()
+      finally sc.clearJobGroup()
+      marker("after")
+      val deadline = System.currentTimeMillis() + 10000
+      while (!seen.asScala.exists(group(_) == "after") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+      val run = seen.asScala.toSeq.dropWhile(group(_) != "before").drop(1)
+        .takeWhile(group(_) != "after")
+      // fused pass + 4 grouping sets + 4 storage writes, at least
+      run.size should be >= 9
+      run.map(group).distinct shouldBe Seq("dq-group")
+      run.map(_.getProperty("spark.job.description")).distinct shouldBe
+        Seq("dq run under test")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a failing grouping job fails the run and leaves no helper thread") {
+    val bad = concGroups :+ DistinctValuesMetric("ghost", Seq("no_such_column"))
+    an[org.apache.spark.sql.AnalysisException] should be thrownBy
+      concJob("bad", None, bad).run()
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-concurrently")) shouldBe empty
+  }
+
+  test("two runs on one session from two threads both return correct results") {
+    val dirs = Seq.fill(2)(Files.createTempDirectory("graft-dq-two").toString)
+    val results = new Array[JobResult](2)
+    val threads = dirs.zipWithIndex.map { case (d, i) =>
+      new Thread(() => results(i) =
+        concJob(s"two$i", Some(new ParquetDqStorage(spark, d))).run())
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    results.foreach(r => sameResults(r.metrics, sequential))
+    dirs.zipWithIndex.foreach { case (d, i) =>
+      spark.read.parquet(s"$d/results_metrics")
+        .filter(s"job_id = 'two$i'").count() shouldBe sequential.size
+    }
+  }
+
+  test("JDBC storage takes the four concurrent saves and reads every row back") {
+    System.setProperty("derby.system.home",
+      Files.createTempDirectory("derby-home").toString)
+    val url = "jdbc:derby:memory:graftdqconc;create=true"
+    val storage = new graft.storage.JdbcDqStorage(url)
+    try {
+      val t0 = Instant.parse("2026-08-01T00:00:00Z")
+      val runs = (0 until 3).map { d =>
+        val at = t0.plusSeconds(86400L * d)
+        concJob("jconc", Some(storage)).run(at)
+      }
+      val end = t0.plusSeconds(86400L * 3)
+      sequential.foreach { m =>
+        storage.metricHistory("jconc", m.metricId, end).map(_.value) shouldBe
+          Seq.fill(3)(m.value)
+        storage.metricErrors("jconc", m.metricId, end).size shouldBe
+          3 * m.errors.distinct.size
+      }
+      storage.latestJobState("jconc", end) shouldBe Some("{}")
+      val conn = java.sql.DriverManager.getConnection("jdbc:derby:memory:graftdqconc")
+      try {
+        def count(table: String): Int = {
+          val rs = conn.createStatement().executeQuery(
+            s"SELECT COUNT(*) FROM $table WHERE job_id = 'jconc'")
+          rs.next(); rs.getInt(1)
+        }
+        count("results_checks") shouldBe runs.map(_.checks.size).sum
+        count("job_state") shouldBe 3
+        count("results_metrics") shouldBe 3 * sequential.size
+      } finally conn.close()
+    } finally storage.close()
   }
 }

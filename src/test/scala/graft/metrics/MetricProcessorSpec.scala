@@ -237,4 +237,42 @@ class MetricProcessorSpec extends AnyFunSuite with Matchers {
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     plan.collect { case a: Aggregate => a } should have size 1
   }
+
+  test("numeric metrics read strings exactly as try_cast does") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.{MayCastToDouble, TryCastDouble}
+    val raw = Seq("1d", " 1 ", "0x1p3", "1e5", "+Infinity", "-inf", "NaN", "",
+      "n/a", "A", "\u0661", null, "  nan\t", "INF", "-Infinity ", "N", "none",
+      "1e309", "7.25", "-0", "\u00a0inf")
+    val df = raw.toDF("raw")
+    // value by value
+    df.select(TryCastDouble(col("raw")), col("raw").try_cast("double"))
+      .collect().foreach { r =>
+        withClue(r) { String.valueOf(r.get(0)) shouldBe String.valueOf(r.get(1)) }
+      }
+    // metric by metric, against the same metrics over try_cast values
+    val ms: Seq[RowMetric] = Seq(
+      CastedNumberMetric("casted", Seq("raw")),
+      FormattedNumberMetric("fmt", Seq("raw"), 8, 2),
+      FormattedNumberMetric("fmt_out", Seq("raw"), 8, 2, outbound = true),
+      NumberDomainMetric("dom", Seq("raw"), Set(1.0, 8.0, 1e5)),
+      NumberDomainMetric("dom_out", Seq("raw"), Set(1.0), outbound = true),
+      NumberValuesMetric("vals", Seq("raw"), 1.0),
+      NumberCompareMetric("lt", Seq("raw"), 5.0, greater = false),
+      NumberCompareMetric("ge", Seq("raw"), 1.0, greater = true, includeBound = true),
+      NumberBetweenMetric("btw", Seq("raw"), 0.0, 10.0),
+      NumberBetweenMetric("nbtw", Seq("raw"), 0.0, 10.0, negate = true),
+      NumberExtremeMetric("min", Seq("raw"), isMax = false),
+      NumberExtremeMetric("max", Seq("raw"), isMax = true),
+      SumNumberMetric("sum", Seq("raw")),
+      PercentileAtValueMetric("pct", "raw", 1.0))
+    val got = MetricProcessor.processRowMetrics(df, ms)
+    val want = MetricProcessor.processRowMetrics(
+      df.select(col("raw").try_cast("double").as("raw")), ms)
+    got.map(r => (r.metricId, r.value.toString)) shouldBe
+      want.map(r => (r.metricId, r.value.toString))
+    // non-string inputs keep the plain cast: no string test in the plan
+    numDf.select(TryCastDouble(col("n1"))).queryExecution.optimizedPlan
+      .expressions.exists(_.exists(_.isInstanceOf[MayCastToDouble])) shouldBe false
+  }
 }

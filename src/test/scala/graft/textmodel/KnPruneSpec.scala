@@ -3,6 +3,8 @@ package graft.textmodel
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import org.apache.spark.sql.functions.col
+
 import graft.TestSpark
 import graft.operators.TextAnalysis
 
@@ -120,5 +122,37 @@ class KnPruneSpec extends AnyFunSuite with Matchers {
         m.perplexity(t) shouldBe b(lang).perplexity(t) // exact doubles
       }
     }
+  }
+
+  test("trainKnByLang: a null language survives another language's cap") {
+    val rows = docs.map { case (id, t) => (id, "en", t) } :+
+      ((999L, null: String, "a null language row"))
+    val ldf = spark.sparkContext.parallelize(rows, 3)
+      .toDF("doc_id", "lang", "text")
+    val full = TextAnalysis.trainKnByLang(ldf, "lang", "text",
+      maxTypesPerLang = Int.MaxValue)
+    full.keySet shouldBe Set("en", null)
+    val cap = full(null).trigramTypes
+    full("en").trigramTypes should be > cap
+    // "en" over the cap, null at it: the null group takes the unranked leg
+    val pruned = TextAnalysis.trainKnByLang(ldf, "lang", "text",
+      maxTypesPerLang = cap)
+    pruned.keySet shouldBe Set("en", null)
+    pruned(null).trigramTypes shouldBe cap
+    pruned("en").trigramTypes should be <= cap
+    // null over the cap too: it takes the ranked leg
+    val tight = TextAnalysis.trainKnByLang(ldf, "lang", "text",
+      maxTypesPerLang = cap - 1)
+    tight.keySet shouldBe Set("en", null)
+    tight(null).trigramTypes should (be > 0 and be <= cap - 1)
+    // the oracle mirror agrees at the default cap, null scoring null
+    val models = TextAnalysis.trainKnByLang(ldf, "lang", "text")
+    val spark6 = ldf.select(col("doc_id"), org.apache.spark.sql.functions.round(
+        TextAnalysis.pplWithByLang(col("lang"), col("text"), models), 6))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
+      .toMap
+    graft.corpus.Fixtures.trainKnByLangPpl(rows)
+      .map(e => e.doc_id -> e.lang_ppl).toMap shouldBe spark6
+    spark6(999L) shouldBe None
   }
 }
