@@ -48,6 +48,11 @@ final case class JobResult(
   * first failure rethrown once the others have finished. Results keep the
   * sequential order. A [[graft.storage.DqStorage]] must therefore accept
   * concurrent saves.
+  *
+  * A failed persist is not atomic across the four writes: `run` throws the
+  * first failure, but any of the other writes that ran (job state and
+  * check rows included, even when `saveMetrics` failed) stay committed, so
+  * a retry at the same `referenceTs` appends them a second time.
   */
 final class DqBatchJob(
     spark: SparkSession,

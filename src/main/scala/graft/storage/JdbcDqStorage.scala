@@ -24,7 +24,8 @@ import graft.metrics.{HistoryPoint, MetricResult}
   * Thread safety: one `Connection` with autocommit off carries every
   * call, and each call ends in its own commit, so interleaved calls would
   * commit or roll back each other's rows. Every public method therefore
-  * holds the connection's lock for its whole transaction.
+  * holds the connection's lock for its whole transaction, and a method
+  * that fails rolls its transaction back before releasing the lock.
   */
 final class JdbcDqStorage(url: String,
     props: java.util.Properties = new java.util.Properties(),
@@ -37,6 +38,17 @@ final class JdbcDqStorage(url: String,
   private val conn: Connection = DriverManager.getConnection(url, props)
   conn.setAutoCommit(false)
   migrate()
+
+  /** Runs one public call's transaction under the connection's lock. A
+    * call that throws rolls its own statements back before the lock is
+    * released, so the next call's commit cannot commit them. */
+  private def locked[T](body: => T): T = conn.synchronized {
+    try body
+    catch { case e: Throwable =>
+      try conn.rollback() catch { case _: java.sql.SQLException => }
+      throw e
+    }
+  }
 
   /** Applied-migration ledger, read back for tests/ops. */
   def appliedVersions: Seq[Int] = locked {
@@ -60,8 +72,6 @@ final class JdbcDqStorage(url: String,
     * applied without ever creating this schema's result tables. Drivers
     * predating JDBC 4.1 `getSchema` (AbstractMethodError) fall back to the
     * unscoped scan — the pre-4.1 behavior, no worse than before. */
-  private def locked[T](body: => T): T = conn.synchronized(body)
-
   private def tableExists(table: String): Boolean = {
     val md = conn.getMetaData
     val cat = try Option(conn.getCatalog) catch { case _: Throwable => None }

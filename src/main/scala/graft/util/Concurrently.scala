@@ -22,7 +22,6 @@ import org.apache.spark.sql.execution.SQLExecution
 object Concurrently {
 
   def apply[T](spark: SparkSession)(thunks: Seq[() => T]): Seq[T] = {
-    if (thunks.size <= 1) return thunks.map(_())
     val sc = spark.sparkContext
     val results = new Array[Any](thunks.size)
     val next = new AtomicInteger(0)

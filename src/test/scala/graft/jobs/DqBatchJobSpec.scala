@@ -134,9 +134,10 @@ class DqBatchJobSpec extends AnyFunSuite with Matchers {
     DuplicateValuesMetric("dup_flags", Seq("l_returnflag")))
 
   private def concJob(id: String, storage: Option[graft.storage.DqStorage],
-      groups: Seq[GroupingMetric] = concGroups) = new DqBatchJob(
+      groups: Seq[GroupingMetric] = concGroups,
+      rows: Seq[RowMetric] = concRows) = new DqBatchJob(
     spark, id, Seq(src),
-    rowMetrics = Map("lineitem" -> concRows),
+    rowMetrics = Map("lineitem" -> rows),
     groupingMetrics = Map("lineitem" -> groups),
     checks = Seq(CheckSpec(GreaterThanCheck("ck_rows", "rows", threshold = Some(1.0)))),
     storage = storage, errorDumpSize = 10000, jobState = Some("{}"))
@@ -254,6 +255,34 @@ class DqBatchJobSpec extends AnyFunSuite with Matchers {
         count("results_checks") shouldBe runs.map(_.checks.size).sum
         count("job_state") shouldBe 3
         count("results_metrics") shouldBe 3 * sequential.size
+      } finally conn.close()
+    } finally storage.close()
+  }
+
+  test("a JDBC save that fails among the concurrent ones stores none of its rows") {
+    System.setProperty("derby.system.home",
+      Files.createTempDirectory("derby-home").toString)
+    val url = "jdbc:derby:memory:graftdqfail;create=true"
+    val storage = new graft.storage.JdbcDqStorage(url)
+    try {
+      val t0 = Instant.parse("2026-08-01T00:00:00Z")
+      // metric_id is VARCHAR(256): the batch fails after the rows before it
+      val tooWide = concRows :+ RowCountMetric("x" * 300)
+      a[java.sql.SQLException] should be thrownBy
+        concJob("jfail", Some(storage), rows = tooWide).run(t0)
+      val later = t0.plusSeconds(86400L)
+      concJob("jfail", Some(storage)).run(later)
+      val end = later.plusSeconds(1)
+      // only the good run's metric rows, none of the failed batch's
+      sequential.foreach { m =>
+        storage.metricHistory("jfail", m.metricId, end) shouldBe
+          Seq(HistoryPoint(later, m.value))
+      }
+      val conn = java.sql.DriverManager.getConnection("jdbc:derby:memory:graftdqfail")
+      try {
+        val rs = conn.createStatement().executeQuery(
+          "SELECT COUNT(*) FROM results_metrics WHERE job_id = 'jfail'")
+        rs.next(); rs.getInt(1) shouldBe sequential.size
       } finally conn.close()
     } finally storage.close()
   }

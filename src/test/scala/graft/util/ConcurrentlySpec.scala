@@ -28,6 +28,7 @@ class ConcurrentlySpec extends AnyFunSuite with Matchers {
     out shouldBe (0 until n).map(i => i * i)
     peak.get should (be > 1 and be <= spark.sparkContext.defaultParallelism)
     helperThreads shouldBe empty
+    Concurrently(spark)(Seq.empty[() => Int]) shouldBe empty
   }
 
   test("first failure rethrown after the running thunks finish; no thread left") {
@@ -47,11 +48,15 @@ class ConcurrentlySpec extends AnyFunSuite with Matchers {
     sc.setJobGroup("cg", "cd")
     sc.setLocalProperty("spark.sql.execution.id", "42")
     try {
-      val props = Concurrently(spark)(Seq.fill(2)(() =>
-        (sc.getLocalProperty("spark.jobGroup.id"),
-          sc.getLocalProperty("spark.job.description"),
-          sc.getLocalProperty("spark.sql.execution.id"))))
-      props shouldBe Seq.fill(2)(("cg", "cd", null))
+      // a single thunk takes the same worker path as several
+      Seq(1, 2).foreach { n =>
+        val props = Concurrently(spark)(Seq.fill(n)(() =>
+          (sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("spark.job.description"),
+            sc.getLocalProperty("spark.sql.execution.id"),
+            Thread.currentThread().getName.startsWith("graft-concurrently"))))
+        props shouldBe Seq.fill(n)(("cg", "cd", null, true))
+      }
     } finally {
       sc.setLocalProperty("spark.sql.execution.id", null)
       sc.clearJobGroup()
