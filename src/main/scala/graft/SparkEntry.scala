@@ -905,13 +905,12 @@ object SparkEntry {
       // labeling leg); for a cheap parquet scan the double scan is the
       // right scale shape, but here the input is the EXPENSIVE scoring
       // projection (langid + KN walk per file) — materialize the narrow
-      // (repo, path, lang, ppl) frame once (lazy localCheckpoint: the
-      // threshold job materializes it, the labeling leg reuses; no pinned
-      // cache to leak). Guide §8: decide on small rows, score heavy bytes
-      // once. r6 measured: full query 0.40 s -> ~0.24 s isolated.
-      val v = QualityFilter.verdicts(corpus, FilterConfig())
-        .select(col("repo"), col("path"), col("lang_pred"), col("kn_ppl"))
-        .localCheckpoint(false)
+      // (repo, path, lang, ppl) frame once (lazy: the threshold job fills
+      // it, the labeling leg reuses; its blocks go with the frame). Guide
+      // §8: decide on small rows, score heavy bytes once. r6 measured: full
+      // query 0.40 s -> ~0.24 s isolated.
+      val v = graft.util.CacheScope.materialize(QualityFilter.verdicts(corpus, FilterConfig())
+        .select(col("repo"), col("path"), col("lang_pred"), col("kn_ppl")))
       graft.operators.Sampling.quantileBuckets(v, "lang_pred", "kn_ppl",
           Seq(1.0 / 3, 2.0 / 3), Seq("head", "middle", "tail"))
         .select(col("repo"), col("path"), col("lang_pred"),

@@ -27,8 +27,10 @@ object JobCount {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val corpus = CorpusGen.corpus(spark, CorpusSpec(nFiles = nFiles)).toDF
-      .localCheckpoint() // input materialized OUTSIDE the counted window
+    // input materialized OUTSIDE the counted window
+    val corpus = graft.util.CacheScope.materialize(
+      CorpusGen.corpus(spark, CorpusSpec(nFiles = nFiles)).toDF)
+    corpus.count()
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit =

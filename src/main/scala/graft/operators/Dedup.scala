@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorTextExprs.shingle_hashes
+import graft.util.CacheScope
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -43,13 +44,13 @@ object Dedup {
     * q_quality_filter_dedup). MEMORY_AND_DISK so oversized corpora spill
     * instead of OOM. */
   private[operators] def shingled(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"), shingle_hashes(col(textCol), n).as("sh"))
-      .withColumn("sz", size(col("sh")))
-      // estimate signature on an independent seed so candidate-band
-      // collisions do not inflate the jaccard estimate
-      .withColumn("sig", graft.functions.VectorTextExprs
-        .min_hash_bands(col("sh"), 64, 1, seed = 77L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    CacheScope.persist(
+      df.select(col(idCol).as("id"), shingle_hashes(col(textCol), n).as("sh"))
+        .withColumn("sz", size(col("sh")))
+        // estimate signature on an independent seed so candidate-band
+        // collisions do not inflate the jaccard estimate
+        .withColumn("sig", graft.functions.VectorTextExprs
+          .min_hash_bands(col("sh"), 64, 1, seed = 77L)))
 
   /** Signature width for the estimate pre-filter and the cut below the
     * threshold that still keeps borderline pairs: 3.5 standard errors at
@@ -95,20 +96,29 @@ object Dedup {
   /** Materializes the (tiny) pair result eagerly so the O(corpus) shingle
     * cache can be released deterministically: retained executor storage
     * shrinks from the whole shingled corpus to the output pair set — which
-    * the caller holds anyway. localCheckpoint also cuts the LSH lineage, so
-    * downstream iterative consumers (connected components) never re-trigger
-    * candidate generation.
+    * the caller holds anyway. The materialized frame's plan is cut
+    * ([[CacheScope.materialize]]), so downstream iterative consumers
+    * (connected components) never re-plan candidate generation; a lost
+    * pair block recomputes from the lineage.
     *
-    * Returns the pair count too: the checkpoint is marked lazily and
-    * `count()` is the materializing action, so the count that every
-    * downstream consumer needs anyway (connected-components size gate, spec
-    * assertions) costs ZERO extra jobs — round 3 ran a separate count()
-    * barrier over the already-checkpointed frame. */
+    * Returns the pair count too: `count()` is the materializing action, so
+    * the count that every downstream consumer needs anyway
+    * (connected-components size gate, spec assertions) costs ZERO extra
+    * jobs — round 3 ran a separate count() barrier over the
+    * already-materialized frame. */
   private[operators] def materializeAndRelease(result: DataFrame, sh: DataFrame): (DataFrame, Long) = {
-    val out = result.localCheckpoint(eager = false)
+    val out = CacheScope.materialize(result)
     val n = out.count()
     sh.unpersist(blocking = false)
     (out, n)
+  }
+
+  /** [[CacheScope.materialize]] filled at once by one job over its rows,
+    * so the caches it was computed from can be released. */
+  private[operators] def materializeNow(df: DataFrame): DataFrame = {
+    val out = CacheScope.materialize(df)
+    out.queryExecution.toRdd.count()
+    out
   }
 
   /** All pairs (a < b) with n-gram Jaccard ≥ tau — prefix-filtered
@@ -179,10 +189,9 @@ object Dedup {
     // index, and its build is the tokens->df->regroup chain above — 16-byte
     // rows, ~(1-tau) of the corpus' distinct shingles, trivially cacheable;
     // released with the shingle cache once the pair result materializes
-    val invR = pref
+    val invR = CacheScope.persist(pref
       .filter(col("dk.df").between(2L, maxShingleDf.toLong))
-      .select(col("dk.k").as("k"), col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("dk.k").as("k"), col("id")))
     val candidates = invR.select(col("k"), col("id").as("a"))
       .join(invR.select(col("k"), col("id").as("b")), Seq("k"))
       .filter(col("a") < col("b"))
@@ -326,8 +335,7 @@ object Dedup {
     // whole corpus. 16 bytes/doc — trivially cacheable at any scale. The
     // pair result is materialized eagerly and the cache released, same
     // discipline as the minhash/ngram paths.
-    val sig = simHash(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sig = CacheScope.persist(simHash(df, idCol, textCol))
     val blocked = sig.select(col("id"), col("simhash"),
       explode(array((0 until numBlocks).map(blk =>
         struct(lit(blk).as("blk"),
@@ -539,7 +547,7 @@ object Dedup {
       knownEdgeCount: Option[Long] = None): DataFrame = {
     // gate on the edge count — passed in when the caller already knows it
     // (the dedup pipeline does: pair materialization counts for free), else
-    // a full parallel count over the checkpointed/cached frame (a
+    // a full parallel count over the materialized frame (a
     // limit()-based probe would funnel rows through a single partition)
     val n = knownEdgeCount.getOrElse(edges.count())
     if (n > driverEdgeLimit) connectedComponents(edges, maxIter)
@@ -608,18 +616,18 @@ object Dedup {
     * every node that appears in an edge; isolated nodes are their own
     * (implicit) component. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    // Iterative self-referencing plans MUST truncate lineage each round:
-    // with plain cache() the logical plan still nests every prior iteration,
-    // and downstream consumers that reference the result more than once sent
+    // Iterative self-referencing plans MUST be cut each round: with plain
+    // cache() the logical plan still nests every prior iteration, and
+    // downstream consumers that reference the result more than once sent
     // the optimizer into exponential constraint/plan-duplication territory
     // (observed: a 2000-row flagship join going from seconds to minutes).
-    // localCheckpoint materializes to executor storage and cuts the plan; on
-    // a real cluster use a reliable checkpoint dir for fault tolerance.
-    val sym = edges.select(col("a"), col("b"))
+    // materializeNow cuts the plan and keeps the RDD lineage, so a lost
+    // block of any round recomputes from the rounds before it.
+    val sym = materializeNow(edges.select(col("a"), col("b"))
       .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
-    var labels = sym.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
+      .distinct())
+    var labels = materializeNow(sym.select(col("a").as("id")).distinct()
+      .withColumn("label", col("id")))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -627,11 +635,10 @@ object Dedup {
         .join(labels.select(col("id").as("b"), col("label").as("blabel")), Seq("b"))
         .groupBy(col("a").as("id")).agg(min(col("blabel")).as("nmin"))
       // the old label rides along, so convergence is a filter over the
-      // checkpointed frame — no second join job per iteration
-      val updated = labels.join(nbrMin, Seq("id"), "left")
+      // materialized frame — no second join job per iteration
+      val updated = materializeNow(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("label").as("__old"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        .localCheckpoint()
+          least(col("label"), coalesce(col("nmin"), col("label"))).as("label")))
       changed = updated.filter(col("label") =!= col("__old")).count()
       labels = updated.select(col("id"), col("label"))
       iter += 1

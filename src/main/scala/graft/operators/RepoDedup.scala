@@ -118,8 +118,8 @@ object RepoDedup {
       maxBucket: Int = 200, maxFiles: Int = 100000): DataFrame = {
     require(tau > 0 && tau <= 1, s"tau must be in (0,1], got $tau")
     // persisted: profiles feed candidate generation + two verify joins
-    val profiles = repoProfiles(files, repoCol, contentCol, lanes, maxFiles)
-      .persist()
+    val profiles = graft.util.CacheScope.persist(
+      repoProfiles(files, repoCol, contentCol, lanes, maxFiles))
     val cand = forkCandidates(profiles, lanes, rowsPerBand, maxBucket)
     val slim = profiles.select(col("repo"), col("n_files"), col("hashes"),
       (col("n_files") >= maxFiles).as("overflow"))
@@ -145,7 +145,7 @@ object RepoDedup {
       .select(col("repo_a"), col("repo_b"),
         col("n_files_a"), col("n_files_b"),
         round(col("jaccard"), 6).as("jaccard"), isExact.as("exact"))
-    val materialized = out.localCheckpoint(eager = true)
+    val materialized = Dedup.materializeNow(out)
     profiles.unpersist(blocking = false)
     materialized
   }

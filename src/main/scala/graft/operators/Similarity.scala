@@ -173,8 +173,7 @@ object Similarity {
     }.toSeq
     // consumed 3x (assignment + both verify legs) — released after the
     // verdict frame is materialized
-    val n = normalized(df, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = graft.util.CacheScope.persist(normalized(df, idCol, vecCol))
     val assign = n.withColumn("cluster",
       graft.functions.VectorTextExprs.centroid_arg_max(col("nv"), unit))
     // a dropped doc only looks DOWN (to smaller ids), so candidates are the
@@ -186,14 +185,13 @@ object Similarity {
         Seq("cluster"))
       .filter(col("id") > col("b") && dot(col("nv"), col("vb")) >= tau)
       .groupBy(col("id")).agg(count(lit(1)).as("n_dups"))
-    val out = assign.select(col("id"), col("cluster"))
+    // eager: the verdict frame is (id, int, long, bool)-narrow; materialize
+    // it so the O(corpus x dims) normalized cache releases deterministically
+    val out = Dedup.materializeNow(assign.select(col("id"), col("cluster"))
       .join(dups, Seq("id"), "left")
       .select(col("id"), col("cluster"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-        (coalesce(col("n_dups"), lit(0L)) === 0).as("keep"))
-      // eager: the verdict frame is (id, int, long, bool)-narrow; materialize
-      // it so the O(corpus x dims) normalized cache releases deterministically
-      .localCheckpoint()
+        (coalesce(col("n_dups"), lit(0L)) === 0).as("keep")))
     n.unpersist(blocking = false)
     out
   }
@@ -224,8 +222,7 @@ object Similarity {
       estimatePreFilter: Boolean = true): DataFrame = {
     // persisted: consumed 3x (signatures + both verify legs) — released
     // below once the (tiny) pair result is materialized
-    val n = normalized(df, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val n = graft.util.CacheScope.persist(normalized(df, idCol, vecCol))
     // Estimate pre-filter (the verify()-phase-1 pattern from the minhash
     // path): a 252-bit hyperplane signature (4x63, independent seed)
     // estimates the angle per candidate from hamming distance, and only
@@ -282,15 +279,14 @@ object Similarity {
           .filter(ham <= lit(cut))
           .select(col("a"), col("b"))
       }).distinct()
-    val result = survivors
+    // eager: materialize the O(pairs) output so the O(corpus) normalized
+    // cache can be released deterministically before returning
+    val result = Dedup.materializeNow(survivors
       .join(n.select(col("id").as("a"), col("nv").as("va")), Seq("a"))
       .join(n.select(col("id").as("b"), col("nv").as("vb")), Seq("b"))
       .withColumn("cosine", dot(col("va"), col("vb")))
       .filter(col("cosine") >= tau)
-      .select(col("a"), col("b"), round(col("cosine"), 6).as("cosine"))
-      // eager: materialize the O(pairs) output so the O(corpus) normalized
-      // cache can be released deterministically before returning
-      .localCheckpoint()
+      .select(col("a"), col("b"), round(col("cosine"), 6).as("cosine")))
     n.unpersist(blocking = false)
     result
   }

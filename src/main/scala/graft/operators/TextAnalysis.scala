@@ -109,19 +109,24 @@ object TextAnalysis {
     // cost changes, results NEVER): full-batch GD is 30 SEQUENTIAL jobs,
     // each a full scheduler barrier, and labeled corpora are small by
     // definition (labels are the scarce resource). At or below
-    // `driverFitLimit` docs the texts are collected once and the identical
-    // accumulate/step loop runs on the driver — bit-identical by the
-    // fixed-point contract (long-sum gradient, order-free; the fixture
+    // `driverFitLimit` docs whose texts fit the driver budget
+    // ([[QualityHeadDriverHeapShare]]) the texts are collected once and the
+    // identical accumulate/step loop runs on the driver — bit-identical by
+    // the fixed-point contract (long-sum gradient, order-free; the fixture
     // oracle is built from exactly this loop and QualityHeadSpec pins
-    // driver == distributed). Above the gate the shuffle-free distributed
+    // driver == distributed). Otherwise the shuffle-free distributed
     // iteration below engages unchanged. n counts ALL rows (null text/label
-    // rows too, matching LogisticGradAgg's skip-but-count semantics).
+    // rows too, matching LogisticGradAgg's skip-but-count semantics); the
+    // text size rides the same aggregate.
     // r6 measured: q_train_quality 2.72 s -> 0.93 s (30 barrier jobs gone).
     val projected = df.select(col(labelCol).cast("boolean").as("y"),
       col(textCol).as("t"))
-    val nTotal = projected.count()
+    val totals = projected.agg(count(lit(1)), sum(length(col("t")))).head()
+    val nTotal = totals.getLong(0)
     require(nTotal > 0, "trainQualityHead needs a non-empty corpus")
-    if (nTotal <= driverFitLimit) {
+    val textBytes = 2.0 * (if (totals.isNullAt(1)) 0L else totals.getLong(1)) // UTF-16
+    if (nTotal <= driverFitLimit &&
+        textBytes <= QualityHeadDriverHeapShare * Runtime.getRuntime.maxMemory) {
       val rows = projected.collect()
       val feats = rows.iterator
         .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
@@ -137,36 +142,40 @@ object TextAnalysis {
       }
       return model
     }
-    val raw = df.select(col(labelCol).cast("boolean").as("y"),
-        graft.functions.TrigramBucketCountsExpr(col(textCol)).as("f"))
-      .persist()
-    val n = raw.count()
-    // every iteration ships one dense 256 KB gradient partial PER PARTITION
-    // (plus the weights in each task binary), so on a small labeled corpus
-    // the fixed per-partition serde dwarfs the compute — coalesce the
-    // features toward ~2000 docs/partition (results are partitioning-
-    // independent by construction: QualityHeadSpec proves bit-identity).
-    // localCheckpoint, NOT persist: a persisted coalesce(raw) is
-    // invalidated when raw is unpersisted (Spark re-caches by plan), which
-    // would silently recompute the corpus featurization EVERY iteration —
-    // checkpointing cuts the lineage so the release of raw cannot reach it.
-    val parts = raw.rdd.getNumPartitions
-    val ideal = math.max(1, math.min(parts, math.ceil(n / 2000.0).toInt))
-    val feats = raw.coalesce(ideal).localCheckpoint(eager = true)
-    raw.unpersist(blocking = false)
-    var model = QualityHead.empty
-    var it = 0
-    while (it < iters) {
-      val grad = feats
-        .agg(graft.functions.LogisticGradAgg(col("f"), col("y"), model))
-        .head.getSeq[Long](0).toArray
-      model = QualityHead.step(model, grad, n, lr)
-      it += 1
+    // the feature caches live exactly as long as the fit
+    graft.util.CacheScope.withScope(df.sparkSession) {
+      val raw = graft.util.CacheScope.persist(df.select(
+        col(labelCol).cast("boolean").as("y"),
+        graft.functions.TrigramBucketCountsExpr(col(textCol)).as("f")))
+      val n = raw.count()
+      // every iteration ships one dense 256 KB gradient partial PER PARTITION
+      // (plus the weights in each task binary), so on a small labeled corpus
+      // the fixed per-partition serde dwarfs the compute — coalesce the
+      // features toward ~2000 docs/partition (results are partitioning-
+      // independent by construction: QualityHeadSpec proves bit-identity).
+      // The coalesced copy is materialized with its plan cut, so releasing
+      // raw cannot invalidate it; a lost block re-reads raw's lineage.
+      val parts = raw.rdd.getNumPartitions
+      val ideal = math.max(1, math.min(parts, math.ceil(n / 2000.0).toInt))
+      val feats = Dedup.materializeNow(raw.coalesce(ideal))
+      raw.unpersist(blocking = false)
+      var model = QualityHead.empty
+      var it = 0
+      while (it < iters) {
+        val grad = feats
+          .agg(graft.functions.LogisticGradAgg(col("f"), col("y"), model))
+          .head.getSeq[Long](0).toArray
+        model = QualityHead.step(model, grad, n, lr)
+        it += 1
+      }
+      model
     }
-    // feats is localCheckpointed — its blocks are released by the
-    // ContextCleaner once the frame goes out of scope
-    model
   }
+
+  /** Share of the driver's max heap the quality head's driver path may
+    * fill with collected text (2 bytes a char); above it the fit runs
+    * distributed whatever the row count. */
+  private[graft] val QualityHeadDriverHeapShare: Double = 1.0 / 16
 
   /** P(keep | text) under a trained quality head — map-only. */
   def scoreWith(text: Column, model: graft.textmodel.QualityHead.Model): Column =

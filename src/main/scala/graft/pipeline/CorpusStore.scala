@@ -93,51 +93,42 @@ object ResumableRun {
       if (done.isEmpty) withPid
       else withPid.filter(!col("partition_id").isInCollection(done.map(Integer.valueOf)))
 
-    val v = QualityFilter.verdicts(pending.drop("partition_id"), cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      store.writeVerdicts(v)
-      val lineage = QualityFilter.partitionLineage(v, jobId)
-        .withColumn("execution_ts", current_timestamp())
-      store.appendLineage(lineage)
-      val stats = v.agg(
-        count(lit(1)), sum(when(col("keep"), 1L).otherwise(0L)),
-        countDistinct(col("partition_id"))).collect().head
-      RunReport(jobId, done.size,
-        if (stats.isNullAt(2)) 0L else stats.getLong(2),
-        stats.getLong(0),
-        if (stats.isNullAt(1)) 0L else stats.getLong(1))
-    } finally v.unpersist()
+    writeAndReport(spark, store, jobId, partitionsSkipped = done.size)(
+      QualityFilter.verdicts(pending.drop("partition_id"), cfg))
   }
 
   /** Full pipeline INCLUDING corpus-level near-dup removal. Near-dup
     * clusters span hash partitions by construction, so this stage is
     * corpus-global and does NOT resume partition-wise (re-run it whole;
-    * the per-file stage above is the partition-resumable one). Every cache
-    * the build creates internally — the scoring projection, dedup shingle
-    * frames, CC iteration snapshots — is released after the store write
-    * ([[graft.util.CacheScope]]), so a long-running job's executor storage
-    * stays bounded by the run, not the session. */
+    * the per-file stage above is the partition-resumable one). */
   def runWithDedup(
       spark: SparkSession,
       input: DataFrame,
       cfg: FilterConfig,
       store: CorpusStore,
       jobId: String): RunReport =
+    writeAndReport(spark, store, jobId, partitionsSkipped = 0)(
+      QualityFilter.verdictsWithDedup(input, cfg))
+
+  /** Builds `verdicts`, writes them and their lineage, and reports. Every
+    * cache the build creates internally — the scoring projection, dedup
+    * shingle frames, CC iteration snapshots — and the verdict cache itself
+    * are released after the store write ([[graft.util.CacheScope]]), so a
+    * long-running job's executor storage stays bounded by the run, not the
+    * session. */
+  private def writeAndReport(spark: SparkSession, store: CorpusStore,
+      jobId: String, partitionsSkipped: Int)(verdicts: => DataFrame): RunReport =
     graft.util.CacheScope.withScope(spark) {
-      val v = QualityFilter.verdictsWithDedup(input, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        store.writeVerdicts(v)
-        store.appendLineage(QualityFilter.partitionLineage(v, jobId)
-          .withColumn("execution_ts", current_timestamp()))
-        val stats = v.agg(
-          count(lit(1)), sum(when(col("keep"), 1L).otherwise(0L)),
-          countDistinct(col("partition_id"))).collect().head
-        RunReport(jobId, 0,
-          if (stats.isNullAt(2)) 0L else stats.getLong(2),
-          stats.getLong(0),
-          if (stats.isNullAt(1)) 0L else stats.getLong(1))
-      } finally v.unpersist()
+      val v = graft.util.CacheScope.persist(verdicts)
+      store.writeVerdicts(v)
+      store.appendLineage(QualityFilter.partitionLineage(v, jobId)
+        .withColumn("execution_ts", current_timestamp()))
+      val stats = v.agg(
+        count(lit(1)), sum(when(col("keep"), 1L).otherwise(0L)),
+        countDistinct(col("partition_id"))).collect().head
+      RunReport(jobId, partitionsSkipped,
+        if (stats.isNullAt(2)) 0L else stats.getLong(2),
+        stats.getLong(0),
+        if (stats.isNullAt(1)) 0L else stats.getLong(1))
     }
 }

@@ -110,15 +110,13 @@ object QualityFilter {
     // persist it runs twice. At 10^12 files this materialization is the
     // verdict table itself (CorpusStore/ResumableRun write it partition-wise
     // and resume from it); MEMORY_AND_DISK is the in-session equivalent.
-    // Release: ResumableRun.runWithDedup wraps this whole build in a
-    // CacheScope and unpersists everything after the store write (spec:
-    // "runWithDedup leaves no cached RDDs behind").
-    val m = withMetrics(input, cfg)
-      .withColumn("key", concat_ws("|", col("repo"), col("path")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // It outlives this method, so the caller's CacheScope releases it
+    // (ResumableRun.runWithDedup: after the store write).
+    val m = graft.util.CacheScope.persist(withMetrics(input, cfg)
+      .withColumn("key", concat_ws("|", col("repo"), col("path"))))
     val kept = m.filter(col("keep")).select(col("key"), col("content"))
-    // eagerly materialized (and lineage-cut) by minHashLshPairs itself,
-    // which also releases its internal shingle cache; consumed 3x below
+    // eagerly materialized (plan cut, lineage kept) by minHashLshPairs
+    // itself, which also releases its internal shingle cache; consumed 3x below
     // (hashed edges + both legs of the id union). The pair count rides
     // along from the materializing job, so the connected-components size
     // gate below costs no extra count() barrier.

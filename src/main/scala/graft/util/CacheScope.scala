@@ -1,32 +1,85 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.storage.StorageLevel
 
-/** Job-scoped cache lifecycle for pipelines whose operators persist or
-  * localCheckpoint internally (shingle frames, CC iteration snapshots, the
-  * scoring projection): runs `f`, then unpersists every RDD whose
-  * persistence was CREATED inside the scope. Caches made before the scope
-  * (e.g. a caller's table cache) are untouched.
+/** The one place that decides how long an operator's cache lives.
   *
-  * Dropping a localCheckpointed RDD's blocks is safe once nothing downstream
-  * will recompute — i.e. after every output of the scope has been
-  * materialized/written, which is the contract of the run-style entry points
-  * that use this. In a long-running service this is what keeps executor
-  * storage O(current job), not O(jobs ever run).
+  *  - [[materialize]] caches a frame's computed rows and cuts its logical
+  *    plan (iterative operators and re-referenced results stay cheap to
+  *    plan) while keeping the RDD lineage: a lost block is recomputed,
+  *    never a failed job.
+  *  - [[persist]] is a plain cache for a reused input that keeps its plan.
   *
-  * Concurrency caveat: the scope is SESSION-wide, not thread-local — if
-  * another job persists frames on a different thread while a scope is open,
-  * those caches are released too. Run-style pipelines (one logical job per
-  * scope) are the intended user; don't wrap scopes around concurrent work
-  * sharing one session.
+  * Both register the cache with the calling thread's innermost open
+  * [[withScope]], which releases exactly what was registered in it when it
+  * closes. Scopes are per thread and inherited by threads started inside
+  * them (e.g. [[Concurrently]] workers), so concurrent jobs on one session
+  * never release each other's caches. Outside any scope the caller owns the
+  * cache: a materialized frame's blocks go when the frame is garbage
+  * collected, a persisted one stays until `unpersist`.
+  *
+  * Releasing early is always safe: a released frame recomputes from its
+  * lineage when read again.
   */
 object CacheScope {
 
-  def withScope[T](spark: SparkSession)(f: => T): T = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try f
-    finally spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !before.contains(id) }
-      .values.foreach(_.unpersist(blocking = false))
+  private final class Scope {
+    private var releases: List[() => Unit] = Nil
+    private var open = true
+    def add(release: () => Unit): Unit = {
+      // a thread that outlives its scope has nothing left to cache for
+      val late = synchronized { if (open) releases ::= release; !open }
+      if (late) release()
+    }
+    def close(): Unit = {
+      val all = synchronized { open = false; val r = releases; releases = Nil; r }
+      all.foreach(_())
+    }
   }
+
+  /** the innermost open scope of this thread, null outside any */
+  private val current = new InheritableThreadLocal[Scope]
+
+  /** Runs `f` in a new scope, then releases every cache [[materialize]] and
+    * [[persist]] registered in it — from this thread or from threads
+    * started inside it — and nothing else. Scopes belong to threads, so
+    * `spark` is not consulted. */
+  def withScope[T](spark: SparkSession)(f: => T): T = {
+    val outer = current.get
+    val scope = new Scope
+    current.set(scope)
+    try f
+    finally {
+      current.set(outer)
+      scope.close()
+    }
+  }
+
+  /** A frame with `df`'s rows whose logical plan is a leaf over their
+    * cached RDD (MEMORY_AND_DISK). Lazy: shuffle stages below the last one
+    * run now, the rows are cached by the first action that reads them. */
+  def materialize(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val rdd = SQLExecution.withNewExecutionId(qe, Some("materialize")) {
+      qe.executedPlan.execute().map(_.copy())
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    register(() => rdd.unpersist(blocking = false))
+    Bridge.logicalRdd(rdd, df)
+  }
+
+  /** `df` cached at MEMORY_AND_DISK, plan kept. A plan someone else has
+    * already cached is left to its owner. */
+  def persist(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      register(() => df.unpersist(blocking = false))
+    }
+    df
+  }
+
+  private def register(release: () => Unit): Unit =
+    Option(current.get).foreach(_.add(release))
 }

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Spark-4 bridge between the public `Column` API and Catalyst `Expression`s.
   *
@@ -22,4 +25,13 @@ object Bridge {
     * walk. */
   def eagerExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** A frame over `rdd` — the rows of `origin`'s executed plan — whose
+    * logical plan is a `LogicalRDD` leaf carrying `origin`'s output
+    * partitioning, ordering and statistics: `Dataset.checkpoint` without
+    * the checkpoint, so the plan is cut and the RDD lineage is kept. */
+  def logicalRdd(rdd: RDD[InternalRow], origin: DataFrame): DataFrame = {
+    val ds = origin.asInstanceOf[Dataset[_]]
+    Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+  }
 }

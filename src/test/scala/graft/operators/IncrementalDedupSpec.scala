@@ -85,9 +85,10 @@ class IncrementalDedupSpec extends AnyFunSuite with Matchers {
     val dir = freshDir("pruning")
     IncrementalDedup.writeIndex(corpus, "doc_id", "text", dir,
       n = 3, bands = 32, rows = 2)
-    // pairsAgainstIndex materializes through localCheckpoint, so the
-    // RETURNED frame's plan is a checkpoint scan — capture the executed
-    // plans of the jobs it runs instead (same pattern as PlanQualitySpec)
+    // pairsAgainstIndex returns a materialized frame (CacheScope), so the
+    // RETURNED frame's plan is a scan of its cached rows — capture the
+    // executed plans of the jobs it runs instead (same pattern as
+    // PlanQualitySpec)
     val plans = scala.collection.mutable.ArrayBuffer[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,

@@ -42,6 +42,49 @@ class QualityHeadSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("under the row limit but over the driver text budget: distributed fit, driver-path model") {
+    // 1 MiB documents, generated per row, just enough of them to pass the
+    // driver's text budget while staying far under driverFitLimit
+    val reps = 150000
+    val docChars = 7L * reps // "w<k> tok " is 7 chars
+    val budgetChars = TextAnalysis.QualityHeadDriverHeapShare *
+      Runtime.getRuntime.maxMemory / 2 // 2 bytes a char
+    val nDocs = (budgetChars / docChars).toInt + 2
+    nDocs should be < 20000
+    val docs = spark.range(nDocs).select((col("id") % 2 === 0).as("keep"),
+      repeat(concat(lit("w"), (col("id") % 4).cast("string"), lit(" tok ")), reps)
+        .as("content"))
+    val iters = 8
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    val model =
+      try {
+        sc.setJobGroup("qh-gate", "quality head over the text budget")
+        val m = try TextAnalysis.trainQualityHead(docs, "keep", "content", iters = iters)
+          finally sc.clearJobGroup()
+        // events arrive in order: once the marker job is seen, all are in
+        sc.setJobGroup("qh-marker", "marker")
+        try sc.parallelize(1 to 2, 1).count() finally sc.clearJobGroup()
+        val deadline = System.currentTimeMillis() + 10000
+        while (!jobs.contains("qh-marker") && System.currentTimeMillis() < deadline)
+          Thread.sleep(10)
+        m
+      } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.count(_ == "qh-gate") should be >= iters
+    val texts = (0 until 4).map(k => s"w$k tok " * reps)
+    val driver = QualityHead.fitLocal(
+      (0 until nDocs).map(i => (i % 2 == 0, texts(i % 4))), iters, 4.0)
+    model.bias shouldBe driver.bias
+    model.w should contain theSameElementsInOrderAs driver.w
+  }
+
   test("learned head separates keep from drop on a held-out quarter") {
     val isEval = pmod(xxhash64(col("path")), lit(4L)) === 0
     val model = TextAnalysis.trainQualityHead(
