@@ -37,14 +37,17 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
       .select(col(idCol), col("dup_count"))
 
-  /** (id, sh: array<long> distinct shingle hashes, sz), persisted: the
+  /** (id, sh: array<long> distinct shingle hashes, sz), materialized: the
     * shingle frame is consumed 3x (inverted index / candidate legs / exact
-    * verify) — without the persist the O(n) shingling pass re-runs each time
+    * verify) — without the cache the O(n) shingling pass re-runs each time
     * (3x the scan cost at 100 TB; round-1 bench showed it dominating
     * q_quality_filter_dedup). MEMORY_AND_DISK so oversized corpora spill
-    * instead of OOM. */
+    * instead of OOM. Materialized rather than persisted because the verify
+    * joins it once per pair side: over one materialized leaf AQE builds one
+    * broadcast for both sides (two scans of a persisted plan are two), and
+    * the pair result's lineage keeps that broadcast alive. */
   private[operators] def shingled(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    CacheScope.persist(
+    CacheScope.materialize(
       df.select(col(idCol).as("id"), shingle_hashes(col(textCol), n).as("sh"))
         .withColumn("sz", size(col("sh")))
         // estimate signature on an independent seed so candidate-band
@@ -109,7 +112,7 @@ object Dedup {
   private[operators] def materializeAndRelease(result: DataFrame, sh: DataFrame): (DataFrame, Long) = {
     val out = CacheScope.materialize(result)
     val n = out.count()
-    sh.unpersist(blocking = false)
+    CacheScope.release(sh)
     (out, n)
   }
 
@@ -197,7 +200,7 @@ object Dedup {
       .filter(col("a") < col("b"))
       .select("a", "b").distinct()
     val out = materializeAndRelease(verify(candidates, sh, tau, estimateFilter), sh)
-    invR.unpersist(blocking = false)
+    CacheScope.release(invR)
     out
   }
 

@@ -146,7 +146,7 @@ object RepoDedup {
         col("n_files_a"), col("n_files_b"),
         round(col("jaccard"), 6).as("jaccard"), isExact.as("exact"))
     val materialized = Dedup.materializeNow(out)
-    profiles.unpersist(blocking = false)
+    graft.util.CacheScope.release(profiles)
     materialized
   }
 }

@@ -192,7 +192,7 @@ object Similarity {
       .select(col("id"), col("cluster"),
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
         (coalesce(col("n_dups"), lit(0L)) === 0).as("keep")))
-    n.unpersist(blocking = false)
+    graft.util.CacheScope.release(n)
     out
   }
 
@@ -287,7 +287,7 @@ object Similarity {
       .withColumn("cosine", dot(col("va"), col("vb")))
       .filter(col("cosine") >= tau)
       .select(col("a"), col("b"), round(col("cosine"), 6).as("cosine")))
-    n.unpersist(blocking = false)
+    graft.util.CacheScope.release(n)
     result
   }
 

@@ -158,7 +158,7 @@ object TextAnalysis {
       val parts = raw.rdd.getNumPartitions
       val ideal = math.max(1, math.min(parts, math.ceil(n / 2000.0).toInt))
       val feats = Dedup.materializeNow(raw.coalesce(ideal))
-      raw.unpersist(blocking = false)
+      graft.util.CacheScope.release(raw)
       var model = QualityHead.empty
       var it = 0
       while (it < iters) {

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 
@@ -19,7 +19,8 @@ import org.apache.spark.storage.StorageLevel
   * them (e.g. [[Concurrently]] workers), so concurrent jobs on one session
   * never release each other's caches. Outside any scope the caller owns the
   * cache: a materialized frame's blocks go when the frame is garbage
-  * collected, a persisted one stays until `unpersist`.
+  * collected, a persisted one stays until released. [[release]] frees
+  * either kind early, once its last reader has run.
   *
   * Releasing early is always safe: a released frame recomputes from its
   * lineage when read again.
@@ -78,6 +79,13 @@ object CacheScope {
       register(() => df.unpersist(blocking = false))
     }
     df
+  }
+
+  /** Releases the cache behind `df`, a frame [[materialize]] or [[persist]]
+    * returned, before its scope closes. */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case materialized: LogicalRDD => materialized.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
   }
 
   private def register(release: () => Unit): Unit =

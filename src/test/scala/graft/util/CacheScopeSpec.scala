@@ -60,6 +60,19 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
     outsideP.unpersist()
   }
 
+  test("release frees a materialized or persisted frame before its scope closes") {
+    CacheScope.withScope(spark) {
+      val m = CacheScope.materialize(frame(110))
+      val p = CacheScope.persist(frame(111))
+      m.count() + p.count() shouldBe 221L
+      CacheScope.release(m)
+      CacheScope.release(p)
+      isPersisted(m) shouldBe false
+      p.storageLevel shouldBe StorageLevel.NONE
+      sumOf(m) shouldBe (0L until 110L).sum
+    }
+  }
+
   test("a plan already cached by its owner is left cached when the scope closes") {
     val owned = frame(104).persist()
     owned.count()
