@@ -28,15 +28,15 @@ import org.apache.spark.storage.StorageLevel
 object CacheScope {
 
   private final class Scope {
-    private var releases: List[() => Unit] = Nil
+    private var frees: List[() => Unit] = Nil
     private var open = true
-    def add(release: () => Unit): Unit = {
+    def add(free: () => Unit): Unit = {
       // a thread that outlives its scope has nothing left to cache for
-      val late = synchronized { if (open) releases ::= release; !open }
-      if (late) release()
+      val late = synchronized { if (open) frees ::= free; !open }
+      if (late) free()
     }
     def close(): Unit = {
-      val all = synchronized { open = false; val r = releases; releases = Nil; r }
+      val all = synchronized { open = false; val r = frees; frees = Nil; r }
       all.foreach(_())
     }
   }
@@ -71,13 +71,10 @@ object CacheScope {
     Bridge.logicalRdd(rdd, df)
   }
 
-  /** `df` cached at MEMORY_AND_DISK, plan kept. A plan someone else has
-    * already cached is left to its owner. */
+  /** `df` cached at MEMORY_AND_DISK, plan kept. */
   def persist(df: DataFrame): DataFrame = {
-    if (df.storageLevel == StorageLevel.NONE) {
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-      register(() => df.unpersist(blocking = false))
-    }
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    register(() => df.unpersist(blocking = false))
     df
   }
 
@@ -88,6 +85,6 @@ object CacheScope {
     case _ => df.unpersist(blocking = false)
   }
 
-  private def register(release: () => Unit): Unit =
-    Option(current.get).foreach(_.add(release))
+  private def register(free: () => Unit): Unit =
+    Option(current.get).foreach(_.add(free))
 }

@@ -73,14 +73,6 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("a plan already cached by its owner is left cached when the scope closes") {
-    val owned = frame(104).persist()
-    owned.count()
-    CacheScope.withScope(spark)(CacheScope.persist(frame(104)).count())
-    owned.storageLevel shouldBe StorageLevel.MEMORY_AND_DISK
-    owned.unpersist()
-  }
-
   test("nested scopes release their own; Concurrently workers register with the caller's") {
     CacheScope.withScope(spark) {
       val outer = CacheScope.materialize(frame(105))
