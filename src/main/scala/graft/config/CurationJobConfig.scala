@@ -129,24 +129,25 @@ object CurationJobConfig {
     val curated0 = TaggerMixer.curate(
       corpus.withColumn("__row", struct(corpus.columns.map(col): _*)),
       c.idCols :+ "__row", taggers, c.rules.map(r => MixRule(r.name, r.sql)))
-    // persisted iff BOTH the kept-rows write and the counts aggregate
-    // consume it — without the cache the whole read+tag+mix pipeline runs
-    // twice (the dominant cost of the job at corpus scale)
-    val curated = if (c.keptPath.isDefined) curated0.persist() else curated0
-
-    c.keptPath.foreach { p =>
-      curated.filter(col("keep")).select(col("__row.*"))
-        .write.mode("overwrite").parquet(p)
-    }
-
     val failCols = c.rules.map(r =>
       coalesce(sum(when(!col(s"pass_${r.name}"), 1L).otherwise(0L)), lit(0L))
         .as(s"fail_${r.name}"))
     val aggs = Seq(count(lit(1)).as("files"),
       coalesce(sum(when(col("keep"), 1L).otherwise(0L)), lit(0L)).as("kept")) ++
       failCols
-    val row = curated.agg(aggs.head, aggs.tail: _*).head
-    if (c.keptPath.isDefined) curated.unpersist(blocking = false)
+    val row = graft.util.CacheScope.withScope(spark) {
+      // persisted iff BOTH the kept-rows write and the counts aggregate
+      // consume it — without the cache the whole read+tag+mix pipeline runs
+      // twice (the dominant cost of the job at corpus scale)
+      val curated =
+        if (c.keptPath.isDefined) graft.util.CacheScope.persist(curated0)
+        else curated0
+      c.keptPath.foreach { p =>
+        curated.filter(col("keep")).select(col("__row.*"))
+          .write.mode("overwrite").parquet(p)
+      }
+      curated.agg(aggs.head, aggs.tail: _*).head
+    }
     val result = CurationRunResult(row.getLong(0), row.getLong(1),
       c.rules.zipWithIndex.map { case (r, i) => r.name -> row.getLong(2 + i) }.toMap)
 

@@ -391,8 +391,4 @@ object JobConfig {
     }
     trees.reduce(Hocon.merge)
   }
-
-  /** Build a job straight from an already-merged tree. */
-  def fromTree(spark: SparkSession, tree: JsonNode): DqBatchJob =
-    build(spark, parseTree(tree))
 }

@@ -122,19 +122,18 @@ object IncrementalDedup {
 
   private def writeSignatures(df: DataFrame, idCol: String, textCol: String,
       dir: String, n: Int, bands: Int, rows: Int, mode: SaveMode,
-      subdir: Option[String] = None): Unit = {
-    // persist: the signature pass feeds two writes (docs + bands); without
-    // it the shingle+minhash CPU — the expensive part — would run twice
-    val sigs = signatures(df, idCol, textCol, n, bands, rows)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val suffix = subdir.map(t => s"/batch=$t").getOrElse("")
-    try {
+      subdir: Option[String] = None): Unit =
+    graft.util.CacheScope.withScope(df.sparkSession) {
+      // persist: the signature pass feeds two writes (docs + bands); without
+      // it the shingle+minhash CPU — the expensive part — would run twice
+      val sigs = graft.util.CacheScope.persist(
+        signatures(df, idCol, textCol, n, bands, rows))
+      val suffix = subdir.map(t => s"/batch=$t").getOrElse("")
       sigs.select("id", "sz", "sh", "sig")
         .write.mode(mode).parquet(docsDir(dir) + suffix)
       sigs.select(col("id"), explode(col("bands")).as("band"))
         .write.mode(mode).parquet(bandsDir(dir) + suffix)
-    } finally sigs.unpersist(blocking = false)
-  }
+    }
 
   private def readMeta(spark: SparkSession, dir: String): (Int, Int, Int) = {
     val r = spark.read.parquet(metaDir(dir)).select("n", "bands", "rows")

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Multimodal columns: media as opaque `binary` with typed metadata.
   *
@@ -280,19 +279,6 @@ object Multimodal {
         MediaFeatures(m.media_id, m.kind, m.bytes.length, w, h, rate, feat)
       }
     }
-  }
-
-  /** DataFrame-surface resize: binary in, binary out, metadata updated — a
-    * real re-encode through a Catalyst expression ([[BmpResize]]), matching
-    * the codebase's Expression discipline (no Scala-udf serialization /
-    * null-boxing per row). */
-  def resizeImages(df: DataFrame, w: Int, h: Int,
-      bytesCol: String = "bytes"): DataFrame = {
-    val resized = org.apache.spark.sql.graft.Bridge.column(
-      BmpResize(org.apache.spark.sql.graft.Bridge.expression(col(bytesCol)), w, h))
-    df.withColumn(bytesCol, resized)
-      .withColumn("width", lit(w))
-      .withColumn("height", lit(h))
   }
 }
 

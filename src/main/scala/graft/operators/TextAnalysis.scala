@@ -269,16 +269,15 @@ object TextAnalysis {
   def trainKnByLang(df: org.apache.spark.sql.DataFrame, langCol: String,
       textCol: String, minCount: Long = 1L,
       maxTypesPerLang: Int = KnMaxTypesDefault)
-      : Map[String, graft.textmodel.LangModel.KnLm] = {
-    val counts = df
-      .select(col(langCol).as("lang"),
-        explode(graft.functions.TrigramKeyCountsExpr(col(textCol)))
-          .as(Seq("k", "c")))
-      .groupBy(col("lang"), col("k")).agg(sum(col("c")).as("c"))
-      .where(col("c") >= minCount)
+      : Map[String, graft.textmodel.LangModel.KnLm] =
+    graft.util.CacheScope.withScope(df.sparkSession) {
       // consumed twice (size probe + collect/rank) — one shuffle, not two
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      val counts = graft.util.CacheScope.persist(df
+        .select(col(langCol).as("lang"),
+          explode(graft.functions.TrigramKeyCountsExpr(col(textCol)))
+            .as(Seq("k", "c")))
+        .groupBy(col("lang"), col("k")).agg(sum(col("c")).as("c"))
+        .where(col("c") >= minCount))
       val overCap = counts.groupBy(col("lang"))
         .agg(count(lit(1)).as("n"))
         .where(col("n") > maxTypesPerLang)
@@ -305,8 +304,7 @@ object TextAnalysis {
         lang -> graft.textmodel.LangModel.knFromTriCounts(
           rows.iterator.map(r => (r.getLong(1), r.getLong(2))))
       }
-    } finally counts.unpersist(blocking = false)
-  }
+    }
 
   /** Perplexity under the row's own language model (null for languages
     * without one) — map-only. */
@@ -601,12 +599,12 @@ object TextAnalysis {
     // it) would otherwise EACH re-shingle + re-distinct the whole
     // benchmark set — a second full pass over exactly the large-bench case
     // this operator exists for
-    val benchGrams = bench
-      .select(explode(shingle_hashes(col(benchTextCol), n)).as("h")).distinct()
-      .persist()
-    val items = math.max(benchGrams.count(), 1L)
-    val bloom = benchGrams.stat.bloomFilter("h", items, fpp)
-    benchGrams.unpersist(blocking = false)
+    val bloom = graft.util.CacheScope.withScope(bench.sparkSession) {
+      val benchGrams = graft.util.CacheScope.persist(bench
+        .select(explode(shingle_hashes(col(benchTextCol), n)).as("h")).distinct())
+      val items = math.max(benchGrams.count(), 1L)
+      benchGrams.stat.bloomFilter("h", items, fpp)
+    }
     corpus.select(col(idCol).as("id"),
         graft.functions.BloomHitsExpr(
           coalesce(shingle_hashes(col(textCol), n),

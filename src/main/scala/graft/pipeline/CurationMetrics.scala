@@ -50,25 +50,6 @@ object CurationMetrics {
     base ++ reasons
   }
 
-  /** Flattens a [[graft.operators.TextAnalysis.corpusReport]] frame into
-    * per-(group, stat) metric rows — bounded: |groups| × 5. */
-  def reportResults(report: DataFrame, sourceId: String,
-      groupCol: String): Seq[MetricResult] =
-    report.collect().toSeq.flatMap { r =>
-      val g = r.getAs[String](groupCol)
-      Seq(
-        MetricResult(s"corpus_${g}_docs", "ROW_COUNT", sourceId, Seq(g),
-          r.getAs[Long]("n_docs").toDouble),
-        MetricResult(s"corpus_${g}_chars", "SUM", sourceId, Seq(g),
-          r.getAs[Long]("total_chars").toDouble),
-        MetricResult(s"corpus_${g}_tokens", "SUM", sourceId, Seq(g),
-          r.getAs[Long]("total_tokens").toDouble),
-        MetricResult(s"corpus_${g}_dup_docs", "DUPLICATE_VALUES", sourceId,
-          Seq(g), r.getAs[Long]("dup_docs").toDouble),
-        MetricResult(s"corpus_${g}_avg_quality", "AVG", sourceId, Seq(g),
-          r.getAs[Double]("avg_quality")))
-    }
-
   /** Publishes a run's metrics through any [[DqStorage]] backend. */
   def publish(storage: DqStorage, jobId: String, referenceTs: Instant,
       results: Seq[MetricResult]): Unit =

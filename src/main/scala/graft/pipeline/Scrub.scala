@@ -55,20 +55,6 @@ object Scrub {
     when(gate, full).otherwise(c)
   }
 
-  /** Count of PII REPLACEMENTS the scrub chain performs — for
-    * metrics/lineage. Each pass counts on the text AFTER the earlier
-    * passes ran (the sequential-scrub semantics): counting every pass on
-    * the ORIGINAL text would double-count, e.g. a hex run inside a PEM
-    * body hit by both pem_key and hex_secret. */
-  def hitCountCol(c: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val (_, total) = passes.foldLeft((c, lit(0L))) { case ((acc, n), p) =>
-      (regexp_replace(acc, p.pattern, p.replacement),
-        n + regexp_count(acc, lit(p.pattern)).cast("long"))
-    }
-    total
-  }
-
   /** Driver/oracle-side scrub: identical passes via java.util.regex. */
   def scrubString(s: String): String =
     passes.foldLeft(s)((acc, p) => acc.replaceAll(p.pattern, p.replacement))

@@ -60,9 +60,9 @@ object StreamingDedup {
   /** One gate decision + write cycle (exposed for the replay spec). */
   def processBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, indexDir: String, storeDir: String,
-      tau: Double): Unit = {
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      tau: Double): Unit =
+    graft.util.CacheScope.withScope(batch.sparkSession) {
+      val b = graft.util.CacheScope.persist(batch)
       val pairs = IncrementalDedup.pairsAgainstIndex(b, idCol, textCol,
         indexDir, tau)
       // (doc, partner) in both directions, restricted to batch docs
@@ -87,8 +87,7 @@ object StreamingDedup {
         .parquet(s"$storeDir/rejected/batch=$batchId")
       IncrementalDedup.appendBatchToIndex(accepted, idCol, textCol,
         indexDir, batchId.toString)
-    } finally b.unpersist(blocking = false)
-  }
+    }
 
   def readAccepted(spark: SparkSession, storeDir: String): DataFrame =
     spark.read.option("basePath", s"$storeDir/accepted")

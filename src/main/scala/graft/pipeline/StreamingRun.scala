@@ -60,9 +60,9 @@ object StreamingRun {
 
   /** Idempotent per-batch store write (exposed for the replay spec). */
   def writeBatch(batch: DataFrame, batchId: Long, storeDir: String,
-      jobId: String, saltBuckets: Int = 16): Unit = {
-    val v = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      jobId: String, saltBuckets: Int = 16): Unit =
+    graft.util.CacheScope.withScope(batch.sparkSession) {
+      val v = graft.util.CacheScope.persist(batch)
       v.repartition(col("partition_id"),
           pmod(xxhash64(col("path")), lit(saltBuckets.toLong)))
         .write
@@ -76,8 +76,7 @@ object StreamingRun {
         .withColumn("execution_ts", current_timestamp())
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$storeDir/lineage/batch_id=$batchId")
-    } finally v.unpersist()
-  }
+    }
 
   /** Union of all batch directories (batch_id recovered from the path). */
   def readVerdicts(spark: SparkSession, storeDir: String): DataFrame =

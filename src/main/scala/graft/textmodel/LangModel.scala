@@ -18,7 +18,8 @@ import graft.util.LongIntMap
   * float array (`w[bucket*L + lang]` — one cache line per trigram instead of
   * L scattered reads), and the KN counts live in primitive open-addressing
   * maps / char-indexed arrays (boxed java.util.HashMap lookups were the
-  * original bottleneck: 288 files/s → see MicroBench).
+  * original bottleneck: 288 files/s → see
+  * `examples/MicroBench.scala @ 9797211`).
   *
   * Capability parity: the reference funnels custom per-value computation
   * through Catalyst expressions (e.g. CheckNumberFormat.scala:28-112);

@@ -62,6 +62,21 @@ class CurationJobConfigSpec extends AnyFunSuite with Matchers {
     hist.head.value shouldBe (result.kept.toDouble / result.files)
   }
 
+  test("a kept-rows write that throws leaves no cache behind") {
+    val tmp = Files.createTempDirectory("graft-curjob-fail").toString
+    // the tagger throws in the write's tasks, after the curated cache is
+    // built (a bad output path fails at job setup, before anything is cached)
+    val conf = CurationJobConfig.Conf("j", "parquet", srcPath, Seq("doc_id"),
+      "text",
+      Seq(CurationJobConfig.TaggerConf("len",
+        "if(length(text) >= 0, raise_error('bad row'), 0)")),
+      Seq(CurationJobConfig.RuleConf("short", "len <= 100")),
+      Some(s"$tmp/kept"), None)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    an[Exception] should be thrownBy CurationJobConfig.run(spark, conf)
+    spark.sparkContext.getPersistentRDDs.keySet shouldBe before
+  }
+
   test("HOCON spec parses to the same job and the same results") {
     val tmp = Files.createTempDirectory("graft-curjob-h").toString
     val hocon =

@@ -270,6 +270,44 @@ class OperatorsSpec extends AnyFunSuite with Matchers {
     filtered shouldBe exact
   }
 
+  test("cosine LSH at exactly tau: the exact verify keeps every candidate, the estimate cut stays in its envelope") {
+    // u_j = e_j and v_jk = 0.6 e_j + 0.8 e_k are unit vectors in double
+    // arithmetic (0.36 + 0.64 == 1.0), so every u_j . v_jk is exactly 0.6:
+    // 992 pairs on the boundary, spread over 32 x 31 pairs of directions
+    val dims = 32
+    val tau = 0.6
+    val unit = (0 until dims).map(j => Array.tabulate(dims)(d => if (d == j) 1.0 else 0.0))
+    val mixed = for (j <- 0 until dims; k <- 0 until dims if k != j)
+      yield Array.tabulate(dims)(d => if (d == j) 0.6 else if (d == k) 0.8 else 0.0)
+    val df = (unit ++ mixed).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    def pairs(out: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    // the operator's candidates: bucket collisions of its default signatures
+    val nv = Similarity.normalized(df, "vec_id", "embedding")
+    val sigs = nv.select(col("id"), posexplode(graft.functions.VectorTextExprs
+      .hyperplane_sigs(col("nv"), 6, 48)).as(Seq("t", "sig")))
+    val candidates = sigs.withColumnRenamed("id", "a")
+      .join(sigs.withColumnRenamed("id", "b"), Seq("t", "sig"))
+      .filter(col("a") < col("b")).select("a", "b").distinct()
+    val cosine = nv.select(col("id").as("a"), col("nv").as("va"))
+      .join(nv.select(col("id").as("b"), col("nv").as("vb")), col("a") < col("b"))
+      .select(col("a"), col("b"), Similarity.dot(col("va"), col("vb")).as("c"))
+    val qualifying = candidates.join(cosine, Seq("a", "b")).filter(col("c") >= tau)
+    val due = pairs(qualifying.select("a", "b"))
+    val atTau = pairs(qualifying.filter(col("c") === tau).select("a", "b"))
+    atTau.size should be > 900
+
+    pairs(Similarity.cosineLshPairs(df, "vec_id", "embedding", dims, tau,
+      estimatePreFilter = false)) shouldBe due
+    val estimated = pairs(Similarity.cosineLshPairs(df, "vec_id", "embedding", dims, tau))
+    estimated.subsetOf(due) shouldBe true
+    // envelope: a pair at exactly tau is missed with p ~= 3e-4; slack of
+    // 3 pairs over that expectation (a cut without its margin misses 740)
+    (atTau -- estimated).size should be <= math.ceil(3e-4 * atTau.size).toInt + 3
+  }
+
   test("cosine LSH finds planted near-identical vectors") {
     val base = (0 until 50).map { i =>
       val r = graft.corpus.Rng(5L, i)

@@ -115,6 +115,54 @@ class QualityFilterSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("multi-MB documents through runWithDedup: verdicts equal the oracle, the big near-dup is dropped") {
+    import graft.corpus.{FileRow, Rng}
+    val size = 8 << 20
+    def grown(head: String)(piece: Long => String): String = {
+      val sb = new StringBuilder(head)
+      var k = 0L
+      while (sb.length < size) { sb ++= piece(k); k += 1 }
+      sb.result()
+    }
+    // many-line clean code of one language: generated files joined to 8 MB
+    def manyLine(seed: Long): String =
+      grown("")(k => CorpusGen.cleanContent("scala", Rng(seed, k), 200) + "\n")
+    val big = manyLine(1L)
+    // every 40th line replaced: word-3gram Jaccard far above dedupTau
+    val twin = big.split("\n", -1).zipWithIndex
+      .map { case (l, i) => if (i % 40 == 0) s"  val twin$i = $i" else l }
+      .mkString("\n")
+    val minified = grown("(function(){")(i => s"f$i(x${i % 97});") + "})();"
+    val commit = "0" * 40
+    val rows = (0L until 200L).map(i => CorpusGen.fileAt(spec.copy(nFiles = 200), i)) ++ Seq(
+      FileRow("big/a", "src/Big.scala", commit, "scala", big),
+      FileRow("big/b", "src/Big.scala", commit, "scala", twin),
+      FileRow("big/c", "src/Other.scala", commit, "scala", manyLine(2L)),
+      FileRow("big/d", "dist/app.min.js", commit, "javascript", minified))
+    val labels = ReferenceOracle.labelCorpus(rows, cfg)
+      .map(l => (l.repo, l.path) -> l).toMap
+    labels(("big/a", "src/Big.scala")).keep shouldBe true
+    labels(("big/b", "src/Big.scala")).dropReasons shouldBe Seq("near_dup")
+    labels(("big/d", "dist/app.min.js")).dropReasons should contain("line_len")
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-multimb").toString
+    val store = new ParquetCorpusStore(dir, saltBuckets = 4)
+    val report = ResumableRun.runWithDedup(spark, rows.toDF().repartition(8), cfg,
+      store, "multimb")
+    report.rowsIn shouldBe rows.size
+    val got = store.readVerdicts(spark).collect()
+      .map(r => (r.getAs[String]("repo"), r.getAs[String]("path")) -> r).toMap
+    got.keySet shouldBe labels.keySet
+    labels.foreach { case (key, l) =>
+      withClue(key) {
+        val row = got(key)
+        row.getAs[Boolean]("keep") shouldBe l.keep
+        row.getAs[scala.collection.Seq[String]]("drop_reasons").toSeq shouldBe l.dropReasons
+        Option(row.getAs[String]("scrubbed_content")) shouldBe l.scrubbed
+      }
+    }
+  }
+
   test("scoring plan is shuffle-free (no Exchange before the write)") {
     val plan = QualityFilter.verdicts(corpus, cfg).queryExecution.executedPlan
     import org.apache.spark.sql.execution.exchange.Exchange
