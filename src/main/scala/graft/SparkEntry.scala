@@ -1242,8 +1242,9 @@ object SparkEntry {
     //      remains spec-asserted too. ----
 
     "q_approx_distinct" -> ((s, dir) => {
-      // HLL++ at rsd=0.01 through the REAL metric engine; 0.04 = 4 standard
-      // errors, pass-deterministic because HLL is deterministic per dataset
+      // HLL sketch at lgConfigK 14 (rsd 0.01) through the REAL metric engine;
+      // 0.04 = 4 standard errors, pass-deterministic because HLL is
+      // deterministic per dataset
       val li = t(s, dir, "lineitem")
       val ms: Seq[RowMetric] = Seq(
         ApproxDistinctMetric("approx_distinct", "l_orderkey"),

@@ -236,7 +236,8 @@ object JobConfig {
       case "APPROXIMATE_DISTINCT_VALUES" =>
         Left(ApproxDistinctMetric(m.id, col1, p("accuracyError", "0.01").toDouble))
       case "APPROXIMATE_SEQUENCE_COMPLETENESS" =>
-        Left(ApproxSeqCompletenessMetric(m.id, col1, p("increment", "1").toLong))
+        Left(ApproxSeqCompletenessMetric(m.id, col1, p("increment", "1").toLong,
+          p("accuracyError", "0.01").toDouble))
       case "TOP_N" => Left(TopNMetric(m.id, col1, p("targetNumber", "10").toInt,
         p("maxCapacity", "1024").toInt))
       case "DISTINCT_VALUES" => Right(DistinctValuesMetric(m.id, m.columns))

@@ -8,30 +8,57 @@ import graft.functions.api.top_n_sketch
 /** APPROXIMATE_DISTINCT_VALUES — HLL cardinality estimate, single pass.
   * The reference ports Algebird HLL as a custom aggregate
   * (ApproxCardinalityDFMetrics.scala:24-68, HLLCountDistinct.scala:39-151);
-  * Spark's built-in `approx_count_distinct` (HyperLogLog++) is the same
-  * capability, mergeable, codegen'd, and sized by relative standard error. */
+  * here it is the DataSketches HLL sketch built into Spark
+  * (`hll_sketch_agg`), mergeable and sized by relative standard error through
+  * [[HllSketch.lgConfigK]]. The sketch takes only int, long, string and
+  * binary input, so every column type goes in as its null-guarded
+  * `xxhash64`, which keeps Spark's equality (`-0.0 = 0.0`, one NaN). */
 final case class ApproxDistinctMetric(id: String, column: String,
     accuracyError: Double = 0.01) extends RowMetric {
+  private val lgK = HllSketch.lgConfigK(accuracyError)
   val name = "APPROXIMATE_DISTINCT_VALUES"
   val columns = Seq(column)
-  def result: Column =
-    approx_count_distinct(col(column), accuracyError).cast("double").as(id)
+  def result: Column = {
+    val c = col(column)
+    HllSketch.estimate(when(c.isNotNull, xxhash64(c)), lgK).as(id)
+  }
   override def errorCondition: Option[Column] = Some(col(column).isNull)
 }
 
 /** APPROXIMATE_SEQUENCE_COMPLETENESS — approx #distinct / expected sequence
   * size ((max-min)/increment + 1), all in ONE fused pass
-  * (ref: ApproxCardinalityDFMetrics.scala:81-128). */
+  * (ref: ApproxCardinalityDFMetrics.scala:81-128). The #distinct is the same
+  * HLL sketch as [[ApproxDistinctMetric]], fed the try-cast long directly. */
 final case class ApproxSeqCompletenessMetric(id: String, column: String,
     increment: Long = 1L, accuracyError: Double = 0.01) extends RowMetric {
+  private val lgK = HllSketch.lgConfigK(accuracyError)
   val name = "APPROXIMATE_SEQUENCE_COMPLETENESS"
   val columns = Seq(column)
   def result: Column = {
     val c = col(column).try_cast("long")
     try_divide(
-      approx_count_distinct(c, accuracyError).cast("double"),
+      HllSketch.estimate(c, lgK),
       (max(c) - min(c)).cast("double") / lit(increment.toDouble) + lit(1.0)).as(id)
   }
+}
+
+/** The one distinct-count sketch of the approximate metrics: DataSketches
+  * HLL with 2^lgConfigK registers. */
+private[metrics] object HllSketch {
+  /** lgConfigK = ⌈2·log2(1.04/accuracyError)⌉ clamped to the sketch's 4–21:
+    * HLL's standard error is 1.04/√registers, so 0.01 gives 14, the same
+    * 2^14 registers HyperLogLog++ picks for that error. Both metrics call it
+    * when built, so a config with an error outside (0, 1) fails there. */
+  def lgConfigK(accuracyError: Double): Int = {
+    require(accuracyError > 0 && accuracyError < 1,
+      s"accuracyError must be in (0, 1), got $accuracyError")
+    math.ceil(2 * math.log(1.04 / accuracyError) / math.log(2)).toInt.max(4).min(21)
+  }
+
+  /** Estimated #distinct non-null values of `c` (int, long, string or
+    * binary), as a double; 0 on no rows. */
+  def estimate(c: Column, lgK: Int): Column =
+    hll_sketch_estimate(hll_sketch_agg(c, lgK)).cast("double")
 }
 
 /** TOP_N — approximate top-N most frequent values, single pass over a

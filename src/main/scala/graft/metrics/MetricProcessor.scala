@@ -13,7 +13,9 @@ import graft.functions.api.collect_list_limit
   *  - ALL single-pass metrics for a source are fused into ONE
   *    `df.select(agg₁, err₁, agg₂, err₂, …)` — logically one `Aggregate` node
   *    with 2N aggregate expressions, physically one scan + partial/final
-  *    HashAggregate. Adding a metric never adds a scan. This is the property
+  *    aggregate: a HashAggregate while every metric is declarative, an
+  *    ObjectHashAggregate once an error dump or a sketch (HLL, quantiles,
+  *    TOP_N) joins. Adding a metric never adds a scan. This is the property
   *    that makes a 40-metric suite run at ~1 scan's cost at 100 TB.
   *  - Grouping metrics are batched by grouping-column set: one shuffle per
   *    distinct column set, shared by every metric that groups on it.

@@ -265,6 +265,18 @@ class JobConfigSpec extends AnyFunSuite with Matchers {
     an[IllegalArgumentException] should be thrownBy m("REGEX_MATCH") // missing regex param
   }
 
+  test("accuracyError reaches both approximate-cardinality metrics; a bad one fails the build") {
+    def m(name: String, err: String) = JobConfig.metric(JobConfig.MetricConf(
+      "id", name, "s", Seq("c"), Map("accuracyError" -> err)))
+    m("APPROXIMATE_DISTINCT_VALUES", "0.05") shouldBe
+      Left(graft.metrics.ApproxDistinctMetric("id", "c", 0.05))
+    m("APPROXIMATE_SEQUENCE_COMPLETENESS", "0.05") shouldBe
+      Left(graft.metrics.ApproxSeqCompletenessMetric("id", "c", 1L, 0.05))
+    for (name <- Seq("APPROXIMATE_DISTINCT_VALUES", "APPROXIMATE_SEQUENCE_COMPLETENESS");
+         err <- Seq("0", "-0.5", "1.5"))
+      an[IllegalArgumentException] should be thrownBy m(name, err)
+  }
+
   test("job state persists per run; encryption section encrypts sensitive fields at rest") {
     val dir = java.nio.file.Files.createTempDirectory("jobstate").toString
     val json =

@@ -145,6 +145,63 @@ class MetricProcessorSpec extends AnyFunSuite with Matchers {
     run(ApproxDistinctMetric("m", "s1")).value shouldBe 3.0 +- 0.5
   }
 
+  /** Both approximate-cardinality metrics over column `v`: (#distinct,
+    * sequence completeness). */
+  private def approx(df: org.apache.spark.sql.DataFrame): (Double, Double) = {
+    val rs = MetricProcessor.processRowMetrics(df, Seq(
+      ApproxDistinctMetric("d", "v"), ApproxSeqCompletenessMetric("sc", "v")))
+    (rs.find(_.metricId == "d").get.value, rs.find(_.metricId == "sc").get.value)
+  }
+
+  test("approximate cardinality is exact on empty, null, one-row and constant inputs") {
+    // no value: 0 distinct, and the expected sequence size is undefined
+    for (df <- Seq(spark.range(0).toDF("v"),
+        spark.range(1000).selectExpr("cast(null as long) as v"))) {
+      val (d, sc) = approx(df)
+      d shouldBe 0.0
+      sc.isNaN shouldBe true
+    }
+    // three values among 997 nulls
+    approx(spark.range(1000).selectExpr("if(id < 3, id + 7, null) as v")) shouldBe ((3.0, 1.0))
+    approx(Seq(42L).toDF("v")) shouldBe ((1.0, 1.0))
+    approx(spark.range(5000).selectExpr("5L as v")) shouldBe ((1.0, 1.0))
+  }
+
+  test("approximate cardinality of 200k distinct values is within 4 standard errors") {
+    val bound = 4 * 1.04 / math.sqrt(1 << HllSketch.lgConfigK(0.01))
+    val (d, sc) = approx(spark.range(200000).selectExpr("id + 1000003 as v"))
+    d / 200000 shouldBe 1.0 +- bound
+    sc shouldBe 1.0 +- bound
+  }
+
+  test("APPROXIMATE_DISTINCT_VALUES keeps Spark's equality on double, date and decimal") {
+    val df = spark.sql("""SELECT * FROM VALUES
+      (0.0D, DATE'2024-01-01', 1.10BD), (-0.0D, DATE'2024-01-01', 1.1BD),
+      (double('NaN'), DATE'2024-01-02', 1.10BD), (double('NaN'), null, null)
+      AS t(x, d, dec)""")
+    val cols = Seq("x", "d", "dec")
+    val exact = cols.map(c =>
+      df.agg(org.apache.spark.sql.functions.countDistinct(c)).head.getLong(0).toDouble)
+    exact shouldBe Seq(2.0, 2.0, 1.0)
+    cols.map(c => run(ApproxDistinctMetric("m", c), df).value) shouldBe exact
+  }
+
+  test("sketch size follows accuracyError; a bad accuracyError fails at construction") {
+    HllSketch.lgConfigK(0.01) shouldBe 14
+    HllSketch.lgConfigK(0.05) shouldBe 9
+    HllSketch.lgConfigK(0.9) shouldBe 4
+    HllSketch.lgConfigK(1e-5) shouldBe 21
+    for (e <- Seq(0.0, -0.01, 1.0, 2.0, Double.NaN)) {
+      an[IllegalArgumentException] should be thrownBy ApproxDistinctMetric("m", "v", e)
+      an[IllegalArgumentException] should be thrownBy
+        ApproxSeqCompletenessMetric("m", "v", accuracyError = e)
+    }
+  }
+
+  test("one distinct-count sketch: no approx_count_distinct in main code") {
+    graft.MainSources.offenders("""(?i)\bapprox_?count_?distinct\b""".r, Set.empty) shouldBe empty
+  }
+
   test("TOP_N exact when capacity >= cardinality") {
     val df = Seq("a", "a", "a", "b", "b", "c").toDF("v")
     val r = run(TopNMetric("m", "v", n = 2), df)
