@@ -18,6 +18,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType}
   *
   * Null input arrays are skipped (a group whose error condition does not
   * hold contributes nothing). Memory stays O(limit) on every executor.
+  *
+  * graft's own grouping dumps do not use it: `MetricProcessor` collects at
+  * most `limit` failing group keys and fetches their rows afterwards, so no
+  * per-group payload is kept. It stays a registered SQL function.
   */
 case class MergeListLimit(
     child: Expression,

@@ -16,12 +16,6 @@ object api {
     Bridge.column(CollectListLimit(Bridge.expression(c), limit)
       .toAggregateExpression())
 
-  /** Size-capped flatten-arrays collect — stage 2 of the grouping-metric
-    * error merge (ref: MergeListWithLimit.scala:29-84). */
-  def merge_list_limit(c: Column, limit: Int): Column =
-    Bridge.column(MergeListLimit(Bridge.expression(c), limit)
-      .toAggregateExpression())
-
   /** Approximate top-N most frequent values:
     * `array<struct<value:string,frequency:double>>`. Exact when the column
     * cardinality fits in `maxMapSize`.

@@ -1,5 +1,7 @@
 package graft.metrics
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -23,10 +25,16 @@ import graft.functions.api.collect_list_limit
   *    (bounded by `defaultParallelism`), so single-task final stages and
   *    driver-side planning of one job overlap the others; result order is
   *    the same as running them one after another.
-  *  - Error dumps are bounded by `errorDumpSize` via `collect_list_limit`
-  *    (never an unbounded collect_list), so executor memory stays constant.
+  *  - Error dumps are bounded by `errorDumpSize`. A row metric's dump is a
+  *    `collect_list_limit` buffer in the fused aggregate (never an
+  *    unbounded collect_list): at most `errorDumpSize` payloads per task
+  *    and metric. A grouping metric's dump keeps no payload per group: the
+  *    aggregate over groups collects at most `errorDumpSize` failing keys,
+  *    and one bounded fetch then reads their rows (see
+  *    [[processGroupingMetrics]]). The keyed aggregate's own state is
+  *    Spark's, one small buffer per group, which Spark tracks and spills.
   *
-  * Only the final 1-row aggregate ever reaches the driver.
+  * Only the 1-row aggregates and the capped dumps ever reach the driver.
   */
 object MetricProcessor {
 
@@ -126,13 +134,18 @@ object MetricProcessor {
   /** Grouping metrics: one shuffle per distinct grouping-column set
     * (ref: DFMetricProcessor.scala:61-79).
     *
-    * Error dumps use the reference's TWO-STAGE capped merge
-    * (GroupingDFMetricCalculator.scala:25-139 + MergeListWithLimit.scala:
-    * 29-84): the per-group stage `collect_list_limit`s full per-row payloads
-    * (key fields + metric columns) inside each group, the final stage
-    * `merge_list_limit`-flattens the payloads of groups whose error
-    * condition holds — so the dump carries actual failing rows, not just
-    * group keys, while both stages stay memory-bounded. */
+    * The dump keeps the reference's contract (GroupingDFMetricCalculator.
+    * scala:25-139): the real rows of failing groups, as key fields plus
+    * grouping columns, at most `errorDumpSize` in total. The reference
+    * collects a row payload inside EVERY group and flattens those of
+    * failing groups in a second capped merge, so its keyed state and
+    * shuffle grow with the row count. Here the keyed aggregate carries only
+    * each metric's `groupResult` (a plain codegen'd HashAggregate); the
+    * aggregate over groups collects at most `errorDumpSize` failing group
+    * KEYS per dumping metric, and only when that list is non-empty does
+    * one bounded fetch run: a left-semi join of the source against those
+    * keys, null-safe on every grouping column, limited to `errorDumpSize`
+    * rows. A set whose groups all pass runs no job beyond its own. */
   def processGroupingMetrics(
       df: DataFrame,
       metrics: Seq[GroupingMetric],
@@ -144,43 +157,71 @@ object MetricProcessor {
   private def byColumnSet(metrics: Seq[GroupingMetric]): Seq[Seq[GroupingMetric]] =
     metrics.groupBy(_.columns).values.toSeq
 
-  /** One job for grouping metrics that share one grouping-column set. */
-  private def processGroupingSet(
+  private def keysName(id: String) = s"__keys_$id"
+
+  /** The 1-row result of one grouping-column set: each metric's final
+    * value and, for each dumping metric, the list of at most
+    * `errorDumpSize` failing group keys as `struct<k0, k1, …>`. */
+  private[metrics] def groupingSetFrame(
       df: DataFrame,
       ms: Seq[GroupingMetric],
-      cfg: Config): Seq[MetricResult] = {
-    val gcols = ms.head.columns
+      cfg: Config): DataFrame = {
+    val gcols = ms.head.columns.map(normName(cfg))
     val norm = normExpr(cfg) _
-    val anyErrors = ms.exists(_.errorCondition.nonEmpty)
     // re-alias the per-group aggregate to the NORMALIZED "<id>_grp" name:
     // norm() lowercases the UnresolvedAttribute references inside
     // finalResult/errorCondition but not Alias nodes, so a mixed-case
     // metric id under a caseSensitive=true host session would otherwise
     // leave the alias "MyId_grp" unresolvable from the lowered "myid_grp"
-    val groupAggs = ms.map(m =>
-      norm(m.groupResult).as(normName(cfg)(m.id) + "_grp")) ++
-      (if (anyErrors)
-        Seq(graft.functions.api.collect_list_limit(
-          rowData(cfg, gcols), cfg.errorDumpSize).as("__grp_rows"))
-      else Nil)
-    val grouped = normalized(df, cfg)
-      .groupBy(gcols.map(c => col(normName(cfg)(c))): _*)
-      .agg(groupAggs.head, groupAggs.tail: _*)
+    val groupAggs = ms.map(m => norm(m.groupResult).as(normName(cfg)(m.id) + "_grp"))
+    val key = struct(gcols.zipWithIndex.map { case (c, i) => col(c).as(s"k$i") }: _*)
     val finals: Seq[Column] = ms.flatMap { m =>
       val res = norm(m.finalResult).as(m.id)
-      val err = m.errorCondition.map { cond =>
-        graft.functions.api.merge_list_limit(
-          when(norm(cond), col("__grp_rows")),
-          cfg.errorDumpSize).as(errName(m.id))
-      }
-      res +: err.toSeq
+      val keys = m.errorCondition.map(cond =>
+        collect_list_limit(when(norm(cond), key), cfg.errorDumpSize).as(keysName(m.id)))
+      res +: keys.toSeq
     }
-    val row: Row = grouped.select(finals: _*).collect().head
+    normalized(df, cfg)
+      .groupBy(gcols.map(col): _*)
+      .agg(groupAggs.head, groupAggs.tail: _*)
+      .select(finals: _*)
+  }
+
+  /** At most `errorDumpSize` rows of the groups in `keys` (collected
+    * `struct<k0, k1, …>` rows, one field per grouping column), as
+    * [[rowData]] payloads. The semi join compares with `<=>`, so groups
+    * keyed by a null are found; Spark normalizes float join keys as it
+    * does grouping keys, so -0.0 and NaN rows meet their group's key. */
+  private def failingRows(
+      df: DataFrame,
+      gcols: Seq[String],
+      keys: Seq[Row],
+      cfg: Config): Seq[Seq[String]] =
+    if (keys.isEmpty) Nil
+    else {
+      val frame = normalized(df, cfg)
+      val keyDf = frame.sparkSession.createDataFrame(keys.asJava, keys.head.schema)
+      val on = gcols.map(normName(cfg)).zip(keyDf.columns)
+        .map { case (c, k) => frame(c) <=> keyDf(k) }.reduce(_ && _)
+      frame.join(keyDf, on, "left_semi")
+        .select(rowData(cfg, gcols))
+        .limit(cfg.errorDumpSize)
+        .collect().map(_.getSeq[String](0)).toSeq
+    }
+
+  /** One job for grouping metrics that share one grouping-column set, then
+    * one bounded fetch per dumping metric that has a failing group. */
+  private def processGroupingSet(
+      df: DataFrame,
+      ms: Seq[GroupingMetric],
+      cfg: Config): Seq[MetricResult] = {
+    val row: Row = groupingSetFrame(df, ms, cfg).collect().head
     ms.map { m =>
       val (value, additional) = m.decode(row.getAs[Any](m.id))
-      val errors = m.errorCondition
-        .map(_ => decodeErrors(row.getAs[Any](errName(m.id))))
-        .getOrElse(Nil)
+      val errors = m.errorCondition.map { _ =>
+        val keys = row.getSeq[Row](row.fieldIndex(keysName(m.id)))
+        failingRows(df, m.columns, keys, cfg)
+      }.getOrElse(Nil)
       MetricResult(m.id, m.name, cfg.sourceId, m.columns, value, additional, errors)
     }
   }

@@ -44,6 +44,10 @@ trait DqStorage {
   def latestJobState(jobId: String, at: Instant): Option[String]
 }
 
+/** Each save writes its rows as ONE parquet file (`coalesce(1)`): the rows
+  * of a run are few (O(#metrics × errorDumpSize) at most), and a local
+  * relation split `defaultParallelism` ways would leave that many files
+  * per table per run for every later history read to list. */
 final class ParquetDqStorage(spark: SparkSession, baseDir: String) extends DqStorage {
   import spark.implicits._
 
@@ -69,7 +73,7 @@ final class ParquetDqStorage(spark: SparkSession, baseDir: String) extends DqSto
       .toDF("job_id", "metric_id", "metric_name", "source_id", "columns",
         "result", "additional_result", "reference_ts", "description",
         "metadata")
-      .write.mode(SaveMode.Append).parquet(metricsDir)
+      .coalesce(1).write.mode(SaveMode.Append).parquet(metricsDir)
 
   override def saveChecks(jobId: String, referenceTs: Instant,
       checks: Seq[CheckResult]): Unit =
@@ -78,7 +82,7 @@ final class ParquetDqStorage(spark: SparkSession, baseDir: String) extends DqSto
       java.sql.Timestamp.from(referenceTs), c.description, c.metadata))
       .toDF("job_id", "check_id", "check_name", "base_metric", "status",
         "message", "is_critical", "reference_ts", "description", "metadata")
-      .write.mode(SaveMode.Append).parquet(checksDir)
+      .coalesce(1).write.mode(SaveMode.Append).parquet(checksDir)
 
   override def metricHistory(jobId: String, metricId: String,
       before: Instant): Seq[HistoryPoint] =
@@ -100,7 +104,7 @@ final class ParquetDqStorage(spark: SparkSession, baseDir: String) extends DqSto
         java.sql.Timestamp.from(referenceTs))))
     if (rows.nonEmpty)
       rows.toDF("job_id", "metric_id", "row_data", "error_hash", "reference_ts")
-        .write.mode(SaveMode.Append).parquet(errorsDir)
+        .coalesce(1).write.mode(SaveMode.Append).parquet(errorsDir)
   }
 
   override def metricErrors(jobId: String, metricId: String,
@@ -118,7 +122,7 @@ final class ParquetDqStorage(spark: SparkSession, baseDir: String) extends DqSto
     Seq((jobId, config, java.sql.Timestamp.from(referenceTs),
       java.sql.Timestamp.from(Instant.now())))
       .toDF("job_id", "config", "reference_ts", "execution_ts")
-      .write.mode(SaveMode.Append).parquet(jobStateDir)
+      .coalesce(1).write.mode(SaveMode.Append).parquet(jobStateDir)
 
   override def latestJobState(jobId: String, at: Instant): Option[String] =
     if (!pathExists(jobStateDir)) None

@@ -234,9 +234,9 @@ class MetricProcessorSpec extends AnyFunSuite with Matchers {
   }
 
   test("grouping error dumps carry per-row payloads (two-stage capped merge)") {
-    // ref semantics (GroupingDFMetrics.scala:167-168 + MergeListWithLimit):
-    // DUPLICATE_VALUES errors are the rows of duplicated groups, with
-    // keyFields prepended to the metric columns
+    // ref semantics (GroupingDFMetrics.scala:167-168): DUPLICATE_VALUES
+    // errors are the rows of duplicated groups, with keyFields prepended to
+    // the metric columns
     val df = Seq(("r1", "a"), ("r2", "a"), ("r3", "b"), ("r4", "c"), ("r5", "c"))
       .toDF("rowkey", "v")
     val r = MetricProcessor.processGroupingMetrics(df,
@@ -251,6 +251,104 @@ class MetricProcessorSpec extends AnyFunSuite with Matchers {
       Seq(DuplicateValuesMetric("dup", Seq("v"))),
       MetricProcessor.Config(keyFields = Seq("rowkey"), errorDumpSize = 3)).head
     capped.errors should have size 3
+  }
+
+  test("grouping error dumps find groups keyed by null, -0.0 and NaN") {
+    // DUPLICATE_VALUES over (a, b): the duplicated groups are (null, 1.0),
+    // (x, 0.0 = -0.0) and (y, NaN); a fetch that compared keys with `=`
+    // would drop the null group's rows without a trace
+    val df = Seq[(String, Option[String], Double)](
+      ("r1", None, 1.0), ("r2", None, 1.0),
+      ("r3", Some("x"), 0.0), ("r4", Some("x"), -0.0),
+      ("r5", Some("y"), Double.NaN), ("r6", Some("y"), Double.NaN),
+      ("r7", None, 2.0), ("r8", Some("x"), 1.0), ("r9", Some("y"), 0.0))
+      .toDF("rowkey", "a", "b")
+    val r = MetricProcessor.processGroupingMetrics(df,
+      Seq(DuplicateValuesMetric("dup", Seq("a", "b"))),
+      MetricProcessor.Config(keyFields = Seq("rowkey"))).head
+    r.value shouldBe 3.0
+    r.errors.map(_.toList).sortBy(_.head) shouldBe Seq(
+      List("r1", "<null>", "1.0"), List("r2", "<null>", "1.0"),
+      List("r3", "x", "0.0"), List("r4", "x", "-0.0"),
+      List("r5", "y", "NaN"), List("r6", "y", "NaN"))
+  }
+
+  /** Jobs started on this thread while `body` runs, counted by a listener. */
+  private def jobCount(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup(group)(body)
+      // events arrive in order: once the marker job is seen, every job of
+      // `body` has been delivered
+      inGroup(s"$group-end")(sc.parallelize(1 to 2, 1).count())
+      val deadline = System.currentTimeMillis() + 10000
+      while (!seen.contains(s"$group-end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      seen.contains(s"$group-end") shouldBe true
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a dumping grouping set keys a HashAggregate and fetches only for failing groups") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import graft.functions.CollectListLimit
+    val ms = Seq(DuplicateValuesMetric("dup", Seq("k")), DistinctValuesMetric("d", Seq("k")))
+    val cfg = MetricProcessor.Config(keyFields = Seq("id"), errorDumpSize = 50)
+    val clean = spark.range(2000).selectExpr("id", "id * 7 AS k")
+    val dirty = spark.range(2000).selectExpr("id", "id % 1500 AS k")
+
+    val frame = MetricProcessor.groupingSetFrame(dirty, ms, cfg)
+    frame.collect()
+    val keyed = new AdaptiveSparkPlanHelper {}.collect(frame.queryExecution.executedPlan) {
+      case a: BaseAggregateExec if a.groupingExpressions.nonEmpty => a
+    }
+    keyed should not be empty
+    keyed.map(_.nodeName).distinct shouldBe Seq("HashAggregate")
+    keyed.flatMap(_.aggregateExpressions).map(_.aggregateFunction)
+      .collect { case c: CollectListLimit => c } shouldBe empty
+
+    // no failing group: the set runs exactly the jobs of its own frame
+    val cleanOwn = jobCount(MetricProcessor.groupingSetFrame(clean, ms, cfg).collect())
+    var cleanResult: Seq[MetricResult] = Nil
+    jobCount { cleanResult = MetricProcessor.processGroupingMetrics(clean, ms, cfg) } shouldBe
+      cleanOwn
+    cleanResult.find(_.metricId == "dup").get.errors shouldBe empty
+    // failing groups: the bounded fetch adds jobs
+    val dirtyOwn = jobCount(MetricProcessor.groupingSetFrame(dirty, ms, cfg).collect())
+    var dirtyResult: Seq[MetricResult] = Nil
+    jobCount { dirtyResult = MetricProcessor.processGroupingMetrics(dirty, ms, cfg) } should be >
+      dirtyOwn
+    dirtyResult.find(_.metricId == "dup").get.errors should have size 50
+  }
+
+  test("a 10,000-row grouping dump holds only rows of duplicated groups") {
+    // 12,000 duplicated keys (two rows each) among 16,000 unique ones
+    val df = spark.range(40000).selectExpr("id", "IF(id < 24000, id DIV 2, id) AS k")
+    val r = MetricProcessor.processGroupingMetrics(df,
+      Seq(DuplicateValuesMetric("dup", Seq("k"))),
+      MetricProcessor.Config(keyFields = Seq("id"), errorDumpSize = 10000)).head
+    r.value shouldBe 12000.0
+    r.errors should have size 10000
+    r.errors.distinct should have size 10000
+    r.errors.count { e =>
+      val id = e.head.toLong
+      !(id < 24000 && id / 2 == e(1).toLong)
+    } shouldBe 0
   }
 
   test("error dump is capped") {
