@@ -7,6 +7,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.apps.CliOptions.jsonEscape
 import graft.config.{CurationJobConfig, JobConfig}
 import graft.storage.DqStorage
 
@@ -38,16 +39,6 @@ final class DqApiServer(storage: Option[DqStorage], port: Int = 0) {
 
   def boundPort: Int = server.getAddress.getPort
 
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.add("Content-Type", "application/json")
@@ -66,30 +57,24 @@ final class DqApiServer(storage: Option[DqStorage], port: Int = 0) {
   server.createContext("/api/health", (ex: HttpExchange) =>
     respond(ex, 200, """{"status":"ok"}"""))
 
-  server.createContext("/api/jobs/validate", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
-    else {
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      val errors =
-        try JobConfig.validate(JobConfig.parse(body))
-        catch { case e: Exception => Seq(s"parse error: ${e.getMessage}") }
-      val errJson = errors.map(e => "\"" + jsonEscape(e) + "\"").mkString("[", ",", "]")
-      respond(ex, 200, s"""{"valid":${errors.isEmpty},"errors":$errJson}""")
-    }
-  })
+  /** `POST` body → `{"valid":bool,"errors":[...]}`, parse errors
+    * reported as errors. */
+  private def validateRoute(path: String, validate: String => Seq[String]): Unit =
+    server.createContext(path, (ex: HttpExchange) => {
+      if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
+      else {
+        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+        val errors =
+          try validate(body)
+          catch { case e: Exception => Seq(s"parse error: ${e.getMessage}") }
+        val errJson = errors.map(e => "\"" + jsonEscape(e) + "\"").mkString("[", ",", "]")
+        respond(ex, 200, s"""{"valid":${errors.isEmpty},"errors":$errJson}""")
+      }
+    })
 
-  // curation-job twin of /api/jobs/validate (CurationJobConfig model)
-  server.createContext("/api/curation/validate", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
-    else {
-      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      val errors =
-        try CurationJobConfig.validate(CurationJobConfig.parse(body))
-        catch { case e: Exception => Seq(s"parse error: ${e.getMessage}") }
-      val errJson = errors.map(e => "\"" + jsonEscape(e) + "\"").mkString("[", ",", "]")
-      respond(ex, 200, s"""{"valid":${errors.isEmpty},"errors":$errJson}""")
-    }
-  })
+  validateRoute("/api/jobs/validate", b => JobConfig.validate(JobConfig.parse(b)))
+  validateRoute("/api/curation/validate",
+    b => CurationJobConfig.validate(CurationJobConfig.parse(b)))
 
   server.createContext("/api/jobs/template", (ex: HttpExchange) => {
     if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
@@ -97,24 +82,21 @@ final class DqApiServer(storage: Option[DqStorage], port: Int = 0) {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       try {
         val req = mapper.readTree(body)
-        def reqStr(n: com.fasterxml.jackson.databind.JsonNode, f: String): String =
-          Option(n.get(f)).map(_.asText).getOrElse(
-            throw new IllegalArgumentException(s"missing field '$f'"))
         val src = Option(req.get("source")).getOrElse(
           throw new IllegalArgumentException("missing field 'source'"))
         val cols = Option(req.get("columns")).map { a =>
-          (0 until a.size()).map(i => (reqStr(a.get(i), "name"),
-            reqStr(a.get(i), "type").toLowerCase))
+          (0 until a.size()).map(i => (JobConfig.str(a.get(i), "name"),
+            JobConfig.str(a.get(i), "type").toLowerCase))
         }.getOrElse(Seq.empty)
 
         val cfg = mapper.createObjectNode()
-        cfg.put("jobId", reqStr(req, "jobId"))
-        val srcId = reqStr(src, "id")
+        cfg.put("jobId", JobConfig.str(req, "jobId"))
+        val srcId = JobConfig.str(src, "id")
         val sources = cfg.putArray("sources")
         val s0 = sources.addObject()
         s0.put("id", srcId)
-        s0.put("kind", reqStr(src, "kind"))
-        s0.put("path", reqStr(src, "path"))
+        s0.put("kind", JobConfig.str(src, "kind"))
+        s0.put("path", JobConfig.str(src, "path"))
 
         val loadChecks = cfg.putArray("loadChecks")
         if (cols.nonEmpty) {

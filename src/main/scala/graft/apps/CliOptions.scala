@@ -112,8 +112,9 @@ object CliOptions {
   }
 
   /** minimal JSON string escape for the apps' one-line machine-readable
-    * reports (jobIds are config-author-controlled free text). */
-  private[apps] def jsonEscape(s: String): String = s.flatMap {
+    * reports and the API server's responses (jobIds and error messages are
+    * config-author-controlled free text). */
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -1,5 +1,7 @@
 package graft.apps
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.config.JobConfig
@@ -21,6 +23,34 @@ object GraftDqBatchApp {
   def main(args: Array[String]): Unit = sys.exit(run(args))
 
   def run(args: Array[String]): Int =
+    shell(args, "graft-dq-batch", "graft DQ batch job") { (spark, opts) =>
+      val job = JobConfig.fromFiles(spark, opts.configPaths, opts.extraVars)
+      () => {
+        val result = opts.refDate.map(job.run).getOrElse(job.run())
+        val failed = result.checks.collect {
+          case (r, _) if !r.status => r.checkId }
+        if (result.passed) {
+          println(s"graft DQ batch job '${result.jobId}' passed " +
+            s"(${result.metrics.size} metrics, ${result.checks.size} checks)")
+          0
+        } else {
+          System.err.println(s"graft DQ batch job '${result.jobId}' FAILED " +
+            s"failure tolerance; failing checks: ${failed.mkString(", ")}")
+          1
+        }
+      }
+    }
+
+  /** The sequence every app runs around its own two phases: parse the CLI
+    * (usage on error, exit 2), build the session (exit 2 if that fails),
+    * run the config phase `configure`, which returns the run phase (exit 2
+    * on any failure — a missing file, malformed config, unreadable source
+    * or validation error must never read as a DQ failure), run the run
+    * phase (exit 1 if it throws; reference parity: DataQualityBatchApp
+    * logs the errors and exits 1), and stop the session only if the app
+    * built it. `job` names the app in the run-phase failure line. */
+  private[apps] def shell(args: Array[String], appName: String, job: String)(
+      configure: (SparkSession, CliOptions) => () => Int): Int =
     CliOptions.parse(args) match {
       case Left(err) =>
         System.err.println(err); System.err.println(CliOptions.usage); 2
@@ -28,38 +58,22 @@ object GraftDqBatchApp {
         // session-build failure (e.g. no master and no --local, no host
         // session to share) is a configuration error — exit 2, never an
         // uncaught crash (ADVICE r5)
-        val (spark, owned) = try buildSession(opts, "graft-dq-batch") catch {
-          case scala.util.control.NonFatal(e) =>
+        val (spark, owned) = try buildSession(opts, appName) catch {
+          case NonFatal(e) =>
             System.err.println(s"cannot build spark session: ${e.getMessage}")
             return 2
         }
         try {
-          // config phase: ANY failure here (missing file, malformed JSON,
-          // unreadable source, validation error) is exit 2 — the CI
-          // contract must not confuse a typo'd path with a DQ failure
-          val job =
-            try JobConfig.fromFiles(spark, opts.configPaths, opts.extraVars)
-            catch { case scala.util.control.NonFatal(e) =>
+          val execute =
+            try configure(spark, opts)
+            catch { case NonFatal(e) =>
               System.err.println(s"invalid configuration: ${e.getMessage}")
               return 2
             }
-          val result = opts.refDate.map(job.run).getOrElse(job.run())
-          val failed = result.checks.collect {
-            case (r, _) if !r.status => r.checkId }
-          if (result.passed) {
-            println(s"graft DQ batch job '${result.jobId}' passed " +
-              s"(${result.metrics.size} metrics, ${result.checks.size} checks)")
-            0
-          } else {
-            System.err.println(s"graft DQ batch job '${result.jobId}' FAILED " +
-              s"failure tolerance; failing checks: ${failed.mkString(", ")}")
-            1
-          }
+          execute()
         } catch {
-          // run-phase failure: the job itself errored (reference parity:
-          // DataQualityBatchApp logs the errors and exits 1)
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"graft DQ batch job failed: ${e.getMessage}")
+          case NonFatal(e) =>
+            System.err.println(s"$job failed: ${e.getMessage}")
             1
         } finally {
           if (owned) spark.stop()

@@ -17,39 +17,15 @@ object GraftDqStreamApp {
   def main(args: Array[String]): Unit = sys.exit(run(args))
 
   def run(args: Array[String]): Int =
-    CliOptions.parse(args) match {
-      case Left(err) =>
-        System.err.println(err); System.err.println(CliOptions.usage); 2
-      case Right(opts) =>
-        val (spark, owned) = try GraftDqBatchApp.buildSession(opts, "graft-dq-stream") catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"cannot build spark session: ${e.getMessage}")
-            return 2
-        }
-        try {
-          // config phase (parse + source-schema bootstrap + query start):
-          // any failure is exit 2 — see GraftDqBatchApp on the contract
-          val (conf, query) =
-            try {
-              val c = StreamJobConfig.parseTree(
-                JobConfig.mergedTree(opts.configPaths, opts.extraVars))
-              (c, StreamJobConfig.start(spark, c))
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"invalid configuration: ${e.getMessage}")
-              return 2
-            }
-          try {
-            query.awaitTermination()
-            println(s"graft DQ stream job '${conf.jobId}' terminated cleanly")
-            0
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"graft DQ stream job '${conf.jobId}' FAILED: ${e.getMessage}")
-              1
-          }
-        } finally {
-          if (owned) spark.stop()
-        }
+    // the config phase covers the source-schema bootstrap and query start
+    GraftDqBatchApp.shell(args, "graft-dq-stream", "graft DQ stream job") { (spark, opts) =>
+      val c = StreamJobConfig.parseTree(
+        JobConfig.mergedTree(opts.configPaths, opts.extraVars))
+      val query = StreamJobConfig.start(spark, c)
+      () => {
+        query.awaitTermination()
+        println(s"graft DQ stream job '${c.jobId}' terminated cleanly")
+        0
+      }
     }
 }

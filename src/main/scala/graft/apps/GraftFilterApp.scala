@@ -25,7 +25,8 @@ import graft.pipeline.{FilterConfig, ParquetCorpusStore, ResumableRun}
   * The run is partition-resumable: re-launching the same jobId against the
   * same store skips completed partitions (per-partition lineage — crash
   * recovery is "run the same command again"). Prints the run report as one
-  * JSON line. Exit codes: 0 = ran; 2 = bad arguments or config.
+  * JSON line. Exit codes: 0 = ran; 1 = the run failed; 2 = bad arguments
+  * or config.
   */
 object GraftFilterApp {
 
@@ -40,9 +41,7 @@ object GraftFilterApp {
       filter: FilterConfig)
 
   def parseTree(root: JsonNode): FilterJobConf = {
-    def str(n: JsonNode, f: String, default: Option[String] = None): String =
-      Option(n.get(f)).map(_.asText).orElse(default).getOrElse(
-        throw new IllegalArgumentException(s"missing field '$f'"))
+    import JobConfig.str
     val input = Option(root.get("input")).getOrElse(
       throw new IllegalArgumentException("filter config needs an 'input' object"))
     val f = Option(root.get("filter"))
@@ -71,50 +70,24 @@ object GraftFilterApp {
   }
 
   def run(args: Array[String]): Int =
-    CliOptions.parse(args) match {
-      case Left(err) =>
-        System.err.println(err); System.err.println(CliOptions.usage); 2
-      case Right(opts) =>
-        val (spark, owned) = try GraftDqBatchApp.buildSession(opts, "graft-quality-filter") catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"cannot build spark session: ${e.getMessage}")
-            return 2
-        }
-        try {
-          // config phase: any failure (missing file, malformed config,
-          // unreadable input) is exit 2 — see GraftDqBatchApp
-          val (conf, input) =
-            try {
-              val c = parseTree(
-                JobConfig.mergedTree(opts.configPaths, opts.extraVars))
-              val in: DataFrame = c.inputKind match {
-                case "parquet" => spark.read.parquet(c.inputPath)
-                case "table" => spark.table(c.inputPath) // incl. Iceberg catalogs
-                case other => throw new IllegalArgumentException(
-                  s"unknown input kind '$other' (want parquet|table)")
-              }
-              (c, in)
-            } catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"invalid configuration: ${e.getMessage}")
-              return 2
-            }
-          val store = new ParquetCorpusStore(conf.store, conf.filter.saltBuckets)
-          val report =
-            if (conf.dedup)
-              ResumableRun.runWithDedup(spark, input, conf.filter, store, conf.jobId)
-            else
-              ResumableRun.run(spark, input, conf.filter, store, conf.jobId)
-          println(
-            s"""{"jobId":"${CliOptions.jsonEscape(report.jobId)}","partitionsSkipped":${report.partitionsSkipped},""" +
-              s""""partitionsProcessed":${report.partitionsProcessed},""" +
-              s""""rowsIn":${report.rowsIn},"rowsKept":${report.rowsKept}}""")
-          0
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"graft filter job failed: ${e.getMessage}")
-            1
-        } finally {
-          if (owned) spark.stop()
-        }
+    GraftDqBatchApp.shell(args, "graft-quality-filter", "graft filter job") { (spark, opts) =>
+      val c = parseTree(JobConfig.mergedTree(opts.configPaths, opts.extraVars))
+      val in: DataFrame = c.inputKind match {
+        case "parquet" => spark.read.parquet(c.inputPath)
+        case "table" => spark.table(c.inputPath) // incl. Iceberg catalogs
+        case other => throw new IllegalArgumentException(
+          s"unknown input kind '$other' (want parquet|table)")
+      }
+      () => {
+        val store = new ParquetCorpusStore(c.store, c.filter.saltBuckets)
+        val report =
+          if (c.dedup) ResumableRun.runWithDedup(spark, in, c.filter, store, c.jobId)
+          else ResumableRun.run(spark, in, c.filter, store, c.jobId)
+        println(
+          s"""{"jobId":"${CliOptions.jsonEscape(report.jobId)}","partitionsSkipped":${report.partitionsSkipped},""" +
+            s""""partitionsProcessed":${report.partitionsProcessed},""" +
+            s""""rowsIn":${report.rowsIn},"rowsKept":${report.rowsKept}}""")
+        0
+      }
     }
 }

@@ -18,14 +18,19 @@ final case class CheckResult(
     description: Option[String] = None,
     metadata: Option[String] = None)
 
+/** A check over one run's metric results — what a batch job and each
+  * finalized stream window evaluate. */
+sealed trait Check {
+  def id: String
+  def name: String
+  def run(results: Seq[MetricResult]): CheckResult
+}
+
 /** Snapshot checks — driver-side comparisons of metric results against a
   * threshold or another metric (ref: core/checks/snapshot/
   * CompareCheckCalculator.scala:14-155). */
-sealed trait SnapshotCheck {
-  def id: String
-  def name: String
+sealed trait SnapshotCheck extends Check {
   def baseMetric: String
-  def run(results: Seq[MetricResult]): CheckResult
 
   protected def lookup(results: Seq[MetricResult], metricId: String): Option[Double] =
     results.find(_.metricId == metricId).map(_.value)
@@ -98,7 +103,7 @@ final case class DifferByLtCheck(id: String, baseMetric: String,
 
 /** Expression check: boolean formula over any metric results, same DSL as
   * composed metrics (ref: ExpressionCheckCalculator.scala:33-194). */
-final case class ExpressionCheck(id: String, formula: String) {
+final case class ExpressionCheck(id: String, formula: String) extends Check {
   val name = "EXPRESSION"
   def run(results: Seq[MetricResult]): CheckResult = {
     val values = results.map(r => r.metricId -> r.value).toMap

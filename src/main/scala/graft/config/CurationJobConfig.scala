@@ -46,27 +46,18 @@ object CurationJobConfig {
   def parseHocon(text: String): Conf = parseTree(Hocon.parse(text))
 
   private def parseTree(root: JsonNode): Conf = {
-    def str(n: JsonNode, f: String, default: Option[String] = None): String =
-      Option(n.get(f)).map(_.asText()).orElse(default)
-        .getOrElse(throw new IllegalArgumentException(s"missing field: $f"))
-    def arr(f: String): Seq[JsonNode] =
-      Option(root.get(f)).map(n => (0 until n.size).map(n.get)).getOrElse(Nil)
+    import JobConfig.{nodes, str, strMap, strSeq}
     val src = Option(root.get("source"))
       .getOrElse(throw new IllegalArgumentException("missing field: source"))
     Conf(
       jobId = str(root, "jobId"),
       sourceKind = str(src, "kind", Some("parquet")),
       sourcePath = str(src, "path"),
-      sourceOptions = Option(src.get("options")).map { o =>
-        import scala.jdk.CollectionConverters._
-        o.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
-      }.getOrElse(Map.empty),
-      idCols = Option(root.get("idCols"))
-        .map(n => (0 until n.size).map(n.get(_).asText()))
-        .getOrElse(Seq("doc_id")),
+      sourceOptions = strMap(src, "options"),
+      idCols = if (root.has("idCols")) strSeq(root, "idCols") else Seq("doc_id"),
       textCol = str(root, "textCol", Some("text")),
-      taggers = arr("taggers").map(t => TaggerConf(str(t, "name"), str(t, "expr"))),
-      rules = arr("rules").map(r => RuleConf(str(r, "name"), str(r, "sql"))),
+      taggers = nodes(root, "taggers").map(t => TaggerConf(str(t, "name"), str(t, "expr"))),
+      rules = nodes(root, "rules").map(r => RuleConf(str(r, "name"), str(r, "sql"))),
       // filterNot(isNull): an explicit JSON `null` must mean absence —
       // NullNode.asText() is the string "null", which would silently
       // become a write to a relative path named 'null'
@@ -113,6 +104,8 @@ object CurationJobConfig {
       referenceTs: java.time.Instant = java.time.Instant.EPOCH): CurationRunResult = {
     val errs = validate(c)
     require(errs.isEmpty, s"invalid curation config: ${errs.mkString("; ")}")
+    // built before the pass, so an unknown storage kind fails up front
+    val storage = c.metricsStorage.map(JobConfig.storage(spark, _))
     // make the compiled signal functions available to config tagger SQL
     // (e.g. "code_stats(lang, content).comment_line_frac",
     // "secret_stats(content).n_flagged") without host-side setup — but
@@ -151,12 +144,7 @@ object CurationJobConfig {
     val result = CurationRunResult(row.getLong(0), row.getLong(1),
       c.rules.zipWithIndex.map { case (r, i) => r.name -> row.getLong(2 + i) }.toMap)
 
-    c.metricsStorage.foreach { st =>
-      val storage = st.kind match {
-        case "parquet" => new graft.storage.ParquetDqStorage(spark, st.location)
-        case other => throw new IllegalArgumentException(
-          s"unsupported metrics storage kind '$other'")
-      }
+    storage.foreach { storage =>
       val metrics = Seq(
         graft.metrics.MetricResult(s"${c.jobId}_files", "ROW_COUNT",
           c.sourcePath, Nil, result.files.toDouble),

@@ -57,12 +57,48 @@ object JobConfig {
 
   private val mapper = new ObjectMapper()
 
-  private def str(n: JsonNode, f: String, default: Option[String] = None): String =
-    Option(n.get(f)).map(_.asText).orElse(default)
+  /** The JSON node readers every job config (batch, stream, curation,
+    * filter) parses with, so one field is read, defaulted and reported
+    * missing the same way everywhere. */
+  private[graft] def str(n: JsonNode, f: String, default: Option[String] = None): String =
+    opt(n, f).orElse(default)
       .getOrElse(throw new IllegalArgumentException(s"missing field '$f' in ${n.toString.take(80)}"))
 
-  private def strSeq(n: JsonNode, f: String): Seq[String] =
-    Option(n.get(f)).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
+  private[graft] def opt(n: JsonNode, f: String): Option[String] =
+    Option(n.get(f)).map(_.asText)
+
+  private[graft] def strSeq(n: JsonNode, f: String): Seq[String] =
+    nodes(n, f).map(_.asText)
+
+  private[graft] def strMap(n: JsonNode, f: String): Map[String, String] =
+    Option(n.get(f)).map(_.properties().asScala
+      .map(e => e.getKey -> e.getValue.asText).toMap).getOrElse(Map.empty)
+
+  private[graft] def nodes(n: JsonNode, f: String): Seq[JsonNode] =
+    Option(n.get(f)).map(_.elements().asScala.toSeq).getOrElse(Nil)
+
+  /** A metric node; `source` is the id of the source it is computed on. */
+  private[graft] def metricNode(m: JsonNode, source: String): MetricConf =
+    MetricConf(str(m, "id"), str(m, "name"), source, strSeq(m, "columns"),
+      strMap(m, "params"), description = opt(m, "description"),
+      metadata = opt(m, "metadata"))
+
+  private[graft] def checkNode(c: JsonNode): CheckConf =
+    CheckConf(str(c, "id"), str(c, "kind"), str(c, "base", Some("")),
+      opt(c, "compareMetric"), Option(c.get("threshold")).map(_.asDouble),
+      opt(c, "formula"), Option(c.get("critical")).exists(_.asBoolean),
+      description = opt(c, "description"), metadata = opt(c, "metadata"))
+
+  private[graft] def storageNode(s: JsonNode): StorageConf =
+    StorageConf(str(s, "kind"), str(s, "location"))
+
+  /** The one place DQ storage is built from config. */
+  private[graft] def storage(spark: SparkSession, s: StorageConf): DqStorage =
+    s.kind.toLowerCase match {
+      case "parquet" => new ParquetDqStorage(spark, s.location)
+      case "jdbc" => new JdbcDqStorage(s.location)
+      case other => throw new IllegalArgumentException(s"unknown storage kind '$other'")
+    }
 
   /** Phase 1: parse the JSON shape. Throws IllegalArgumentException with a
     * precise message on malformed input (ref: PreValidation). */
@@ -74,37 +110,21 @@ object JobConfig {
     * model, one validator, one builder and can never drift. */
   def parseHocon(text: String): Conf = parseTree(Hocon.parse(text))
 
-  private def parseTree(root: JsonNode): Conf = {
-    def arr(f: String): Seq[JsonNode] =
-      Option(root.get(f)).map(_.elements().asScala.toSeq).getOrElse(Nil)
+  private def parseTree(root: JsonNode): Conf =
     Conf(
       jobId = str(root, "jobId"),
-      sources = arr("sources").map(s => SourceConf(
+      sources = nodes(root, "sources").map(s => SourceConf(
         str(s, "id"), str(s, "kind"), str(s, "path"), strSeq(s, "keyFields"),
-        Option(s.get("options")).map(o => o.properties().asScala
-          .map(e => e.getKey -> e.getValue.asText).toMap).getOrElse(Map.empty))),
-      loadChecks = arr("loadChecks").map(c => LoadCheckConf(
+        strMap(s, "options"))),
+      loadChecks = nodes(root, "loadChecks").map(c => LoadCheckConf(
         str(c, "id"), str(c, "kind"),
         Option(c.get("count")).map(_.asInt).getOrElse(0), strSeq(c, "columns"))),
-      metrics = arr("metrics").map(m => MetricConf(
-        str(m, "id"), str(m, "name"), str(m, "source"), strSeq(m, "columns"),
-        Option(m.get("params")).map(p => p.properties().asScala
-          .map(e => e.getKey -> e.getValue.asText).toMap).getOrElse(Map.empty),
-        description = Option(m.get("description")).map(_.asText),
-        metadata = Option(m.get("metadata")).map(_.asText))),
-      composed = arr("composedMetrics").map(c =>
+      metrics = nodes(root, "metrics").map(m => metricNode(m, str(m, "source"))),
+      composed = nodes(root, "composedMetrics").map(c =>
         ComposedConf(str(c, "id"), str(c, "formula"))),
-      checks = arr("checks").map(c => CheckConf(
-        str(c, "id"), str(c, "kind"), str(c, "base", Some("")),
-        Option(c.get("compareMetric")).map(_.asText),
-        Option(c.get("threshold")).map(_.asDouble),
-        Option(c.get("formula")).map(_.asText),
-        Option(c.get("critical")).exists(_.asBoolean),
-        description = Option(c.get("description")).map(_.asText),
-        metadata = Option(c.get("metadata")).map(_.asText))),
-      storage = Option(root.get("storage")).map(s =>
-        StorageConf(str(s, "kind"), str(s, "location"))),
-      tolerance = Option(root.get("tolerance")).map(_.asText.toLowerCase) match {
+      checks = nodes(root, "checks").map(checkNode),
+      storage = Option(root.get("storage")).map(storageNode),
+      tolerance = opt(root, "tolerance").map(_.toLowerCase) match {
         case Some("none") => Tolerance.None
         case Some("all") => Tolerance.All
         case _ => Tolerance.Critical
@@ -117,42 +137,60 @@ object JobConfig {
       rawJson = Some(root.toString),
       encryption = Option(root.get("encryption")).map(e =>
         (str(e, "secret"),
-          Option(e.get("keyFields")).map(_.elements().asScala.map(_.asText).toSeq)
-            .getOrElse(Seq("password", "secret")))))
-  }
+          if (e.has("keyFields")) strSeq(e, "keyFields")
+          else Seq("password", "secret"))))
 
   /** Phase 2: cross-reference validation — ALL violations reported at once
     * (the reference's PostValidation model). */
   def validate(c: Conf): Seq[String] = {
     val errs = Seq.newBuilder[String]
-    def dup(ids: Seq[String], what: String): Unit =
-      ids.groupBy(identity).filter(_._2.size > 1).keys
-        .foreach(id => errs += s"duplicate $what id '$id'")
-    dup(c.sources.map(_.id), "source")
-    dup(c.metrics.map(_.id) ++ c.composed.map(_.id), "metric")
-    dup(c.checks.map(_.id), "check")
+    errs ++= duplicates(c.sources.map(_.id), "source")
+    errs ++= duplicates(c.metrics.map(_.id) ++ c.composed.map(_.id), "metric")
     val srcIds = c.sources.map(_.id).toSet
     c.metrics.filterNot(m => srcIds(m.source))
       .foreach(m => errs += s"metric '${m.id}' references unknown source '${m.source}'")
     val metricIds = (c.metrics.map(_.id) ++ c.composed.map(_.id)).toSet
-    c.checks.filter(ch => ch.kind.toUpperCase != "EXPRESSION" && !metricIds(ch.base))
-      .foreach(ch => errs += s"check '${ch.id}' references unknown metric '${ch.base}'")
-    c.checks.filter(ch => ch.kind.toUpperCase != "EXPRESSION" &&
-        ch.compareMetric.isEmpty && ch.threshold.isEmpty)
-      .foreach(ch => errs += s"check '${ch.id}' needs compareMetric or threshold")
-    // DIFFER_BY_LT compares base vs compareMetric WITHIN a threshold — both
-    // are required (the generic compareMetric-or-threshold rule above is
-    // not enough; a missing one must surface here, not as a crash in build)
-    c.checks.filter(ch => ch.kind.toUpperCase == "DIFFER_BY_LT" &&
-        (ch.compareMetric.isEmpty || ch.threshold.isEmpty))
-      .foreach(ch => errs += s"DIFFER_BY_LT check '${ch.id}' needs BOTH compareMetric and threshold")
-    c.checks.filter(ch => ch.kind.toUpperCase == "EXPRESSION" && ch.formula.isEmpty)
-      .foreach(ch => errs += s"expression check '${ch.id}' needs a formula")
-    val refRe = "\\{\\{\\s*([\\w.\\-]+)\\s*\\}\\}".r
-    (c.composed.map(cc => cc.id -> cc.formula) ++
-      c.checks.flatMap(ch => ch.formula.map(ch.id -> _))).foreach { case (id, f) =>
-      refRe.findAllMatchIn(f).map(_.group(1)).filterNot(metricIds)
-        .foreach(ref => errs += s"formula of '$id' references unknown metric '$ref'")
+    c.composed.foreach(cc => errs ++= unknownRefs(cc.id, cc.formula, metricIds))
+    errs ++= checkErrors(c.checks, metricIds)
+    errs.result()
+  }
+
+  private[config] def duplicates(ids: Seq[String], what: String): Seq[String] =
+    ids.groupBy(identity).filter(_._2.size > 1).keys.toSeq
+      .map(id => s"duplicate $what id '$id'")
+
+  private val refRe = "\\{\\{\\s*([\\w.\\-]+)\\s*\\}\\}".r
+
+  private def unknownRefs(id: String, formula: String, metricIds: Set[String]): Seq[String] =
+    refRe.findAllMatchIn(formula).map(_.group(1)).filterNot(metricIds)
+      .map(ref => s"formula of '$id' references unknown metric '$ref'").toSeq
+
+  /** The rules on checks, shared by the batch and stream validators:
+    * every metric a check names (base, compareMetric, formula reference)
+    * must be one of `metricIds`, and each kind carries the fields it needs.
+    * A compareMetric that names no metric must fail here: at run time the
+    * failed lookup falls back to the threshold and the check passes on a
+    * value nobody asked for. */
+  private[config] def checkErrors(checks: Seq[CheckConf], metricIds: Set[String]): Seq[String] = {
+    val errs = Seq.newBuilder[String]
+    errs ++= duplicates(checks.map(_.id), "check")
+    checks.foreach { ch =>
+      val kind = ch.kind.toUpperCase
+      if (kind != "EXPRESSION") {
+        if (!metricIds(ch.base))
+          errs += s"check '${ch.id}' references unknown metric '${ch.base}'"
+        if (ch.compareMetric.isEmpty && ch.threshold.isEmpty)
+          errs += s"check '${ch.id}' needs compareMetric or threshold"
+      }
+      // DIFFER_BY_LT compares base vs compareMetric WITHIN a threshold —
+      // both are required, or build would crash instead of this reporting
+      if (kind == "DIFFER_BY_LT" && (ch.compareMetric.isEmpty || ch.threshold.isEmpty))
+        errs += s"DIFFER_BY_LT check '${ch.id}' needs BOTH compareMetric and threshold"
+      if (kind == "EXPRESSION" && ch.formula.isEmpty)
+        errs += s"expression check '${ch.id}' needs a formula"
+      ch.compareMetric.filterNot(metricIds).foreach(cm =>
+        errs += s"check '${ch.id}' compareMetric references unknown metric '$cm'")
+      ch.formula.foreach(f => errs ++= unknownRefs(ch.id, f, metricIds))
     }
     errs.result()
   }
@@ -272,26 +310,24 @@ object JobConfig {
       case other => throw new IllegalArgumentException(s"unknown load check '$other'")
     }
 
-  private[config] def check(c: CheckConf): Either[CheckSpec, ExpressionCheckSpec] =
-    c.kind.toUpperCase match {
-      case "EQUAL_TO" =>
-        Left(CheckSpec(EqualToCheck(c.id, c.base, c.compareMetric, c.threshold), c.critical))
-      case "LESS_THAN" =>
-        Left(CheckSpec(LessThanCheck(c.id, c.base, c.compareMetric, c.threshold), c.critical))
-      case "GREATER_THAN" =>
-        Left(CheckSpec(GreaterThanCheck(c.id, c.base, c.compareMetric, c.threshold), c.critical))
+  private[config] def check(c: CheckConf): CheckSpec = {
+    val check = c.kind.toUpperCase match {
+      case "EQUAL_TO" => EqualToCheck(c.id, c.base, c.compareMetric, c.threshold)
+      case "LESS_THAN" => LessThanCheck(c.id, c.base, c.compareMetric, c.threshold)
+      case "GREATER_THAN" => GreaterThanCheck(c.id, c.base, c.compareMetric, c.threshold)
       case "DIFFER_BY_LT" =>
         val cm = c.compareMetric.getOrElse(throw new IllegalArgumentException(
           s"DIFFER_BY_LT check '${c.id}' needs a compareMetric"))
         val th = c.threshold.getOrElse(throw new IllegalArgumentException(
           s"DIFFER_BY_LT check '${c.id}' needs a threshold"))
-        Left(CheckSpec(DifferByLtCheck(c.id, c.base, cm, th), c.critical))
+        DifferByLtCheck(c.id, c.base, cm, th)
       case "EXPRESSION" =>
-        Right(ExpressionCheckSpec(ExpressionCheck(c.id,
-          c.formula.getOrElse(throw new IllegalArgumentException(
-            s"expression check '${c.id}' needs a formula"))), c.critical))
+        ExpressionCheck(c.id, c.formula.getOrElse(throw new IllegalArgumentException(
+          s"expression check '${c.id}' needs a formula")))
       case other => throw new IllegalArgumentException(s"unknown check kind '$other'")
     }
+    CheckSpec(check, c.critical)
+  }
 
   /** Build a runnable job from validated config. */
   def build(spark: SparkSession, c: Conf): DqBatchJob = {
@@ -299,12 +335,6 @@ object JobConfig {
     require(errs.isEmpty, s"invalid job config:\n${errs.mkString("\n")}")
     val srcs = c.sources.map(source(spark, _))
     val byMetric = c.metrics.map(m => (m.source, metric(m)))
-    val storage: Option[DqStorage] = c.storage.map(s => s.kind.toLowerCase match {
-      case "parquet" => new ParquetDqStorage(spark, s.location)
-      case "jdbc" => new JdbcDqStorage(s.location)
-      case other => throw new IllegalArgumentException(s"unknown storage kind '$other'")
-    })
-    val parsedChecks = c.checks.map(check)
     // job-state document: the config as parsed, sensitive fields encrypted
     // when an encryption secret is configured (ref: ConfigEncryptor applied
     // before the job_state write). The 'encryption' section itself is
@@ -331,9 +361,8 @@ object JobConfig {
       groupingMetrics = byMetric.collect { case (s, Right(gm)) => (s, gm) }
         .groupBy(_._1).map { case (s, ms) => s -> ms.map(_._2) },
       composedMetrics = c.composed.map(cc => ComposedMetric(cc.id, cc.formula)),
-      checks = parsedChecks.collect { case Left(cs) => cs },
-      expressionChecks = parsedChecks.collect { case Right(es) => es },
-      storage = storage,
+      checks = c.checks.map(check),
+      storage = c.storage.map(storage(spark, _)),
       tolerance = c.tolerance,
       errorDumpSize = c.errorDumpSize,
       caseSensitive = c.caseSensitive,
@@ -344,24 +373,17 @@ object JobConfig {
           .filter { case (_, (d, md)) => d.nonEmpty || md.nonEmpty }.toMap)
   }
 
-  /** One-call entry: config file path → job. `.conf`/`.hocon` files go
-    * through the HOCON front-end, anything else is read as JSON. */
-  def fromFile(spark: SparkSession, path: String): DqBatchJob = {
-    val text = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-    val conf =
-      if (path.endsWith(".conf") || path.endsWith(".hocon")) parseHocon(text)
-      else parse(text)
-    build(spark, conf)
-  }
+  /** One-call entry: config file path → job; see [[fromFiles]]. */
+  def fromFile(spark: SparkSession, path: String): DqBatchJob =
+    fromFiles(spark, Seq(path))
 
   /** Multi-file entry, reference parity with `buildBatchJob(jobConfigPaths)`
     * (DQContext.scala:594-596): every file parses to a tree (HOCON or JSON
     * by extension) and the trees deep-merge IN ORDER — later files override
     * scalars/arrays, objects merge recursively — before one validate+build.
     * The idiom: a shared base config plus a small per-job override file. */
-  def fromFiles(spark: SparkSession, paths: Seq[String]): DqBatchJob = {
-    build(spark, parseTree(mergedTree(paths)))
-  }
+  def fromFiles(spark: SparkSession, paths: Seq[String]): DqBatchJob =
+    fromFiles(spark, paths, Map.empty)
 
   /** [[fromFiles]] with extra variables (the reference CLI's `-e k=v`
     * option, apps/cli/CommandLineOptions.scala): each `${k}` occurrence in

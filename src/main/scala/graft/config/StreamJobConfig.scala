@@ -12,9 +12,11 @@ import graft.streaming.StreamMetrics
 /** Declarative STREAM job config — the config front-end for the reference's
   * streaming application (apps/stream/DataQualityStreamApp.scala: same job
   * config model as batch, restricted to streamable sources plus window
-  * settings). Shares [[JobConfig]]'s metric factory and the HOCON/JSON
-  * merged-tree front half, so batch and stream configs can never drift in
-  * metric semantics.
+  * settings). Metric, check and storage nodes are read by [[JobConfig]]'s
+  * node readers, checks are validated by the same rules
+  * ([[JobConfig.checkErrors]]) and built by the same factory, and DQ
+  * storage comes from [[JobConfig.storage]]; only the stream-specific
+  * fields (source, window, sink, checkpoint, trigger) are read here.
   *
   * Shape:
   * {{{
@@ -57,12 +59,9 @@ object StreamJobConfig {
       checkpoint: String,
       trigger: String)
 
-  private def str(n: JsonNode, f: String, default: Option[String] = None): String =
-    Option(n.get(f)).map(_.asText).orElse(default).getOrElse(
-      throw new IllegalArgumentException(s"missing field '$f' in ${n.toString.take(80)}"))
+  import JobConfig.{checkNode, metricNode, nodes, opt, storageNode, str, strMap}
 
   def parseTree(root: JsonNode): Conf = {
-    import scala.jdk.CollectionConverters._
     val source = Option(root.get("source")).getOrElse(
       throw new IllegalArgumentException("stream config needs a 'source' object"))
     val window = Option(root.get("window")).getOrElse(
@@ -70,47 +69,29 @@ object StreamJobConfig {
     // filter(!_.isNull): a merged override `sink = null` DISABLES the file
     // sink (the HOCON null-override idiom), it is not a path-less sink
     val sink = Option(root.get("sink")).filter(!_.isNull)
-    val storage = Option(root.get("storage")).filter(!_.isNull).map(s =>
-      JobConfig.StorageConf(str(s, "kind"), str(s, "location")))
+    val storage = Option(root.get("storage")).filter(!_.isNull).map(storageNode)
     require(sink.nonEmpty ^ storage.nonEmpty,
       "stream config needs EXACTLY ONE of 'sink' (windowed metric files) " +
         "or 'storage' (per-window checks + DQ storage) — a job that wants " +
         "both runs two stream jobs over the same source; override the " +
         "unused one to null in the later config file")
-    val metrics = Option(root.get("metrics")).map(_.elements().asScala.toSeq)
-      .getOrElse(Nil).map { m =>
-        JobConfig.MetricConf(str(m, "id"), str(m, "name"), "stream",
-          Option(m.get("columns")).map(_.elements().asScala.map(_.asText).toSeq)
-            .getOrElse(Nil),
-          Option(m.get("params")).map(p => p.properties().asScala
-            .map(e => e.getKey -> e.getValue.asText).toMap).getOrElse(Map.empty))
-      }
+    val metrics = nodes(root, "metrics").map(metricNode(_, "stream"))
     require(metrics.nonEmpty, "stream config needs at least one metric")
     val conf = Conf(
       jobId = str(root, "jobId"),
       sourceKind = str(source, "kind").toLowerCase,
       sourcePath = str(source, "path"),
-      sourceOptions = Option(source.get("options")).map(o =>
-        o.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap)
-        .getOrElse(Map.empty),
+      sourceOptions = strMap(source, "options"),
       timeMode = str(window, "timeMode", Some("event")).toLowerCase,
       tsCol = str(window, "tsCol", Some("")),
-      tsExpr = Option(window.get("tsExpr")).map(_.asText),
+      tsExpr = opt(window, "tsExpr"),
       windowDuration = str(window, "duration"),
       watermark = str(window, "watermark"),
-      slide = Option(window.get("slide")).map(_.asText),
+      slide = opt(window, "slide"),
       metrics = metrics,
       sinkPath = sink.map(s => str(s, "path")),
       storage = storage,
-      checks = Option(root.get("checks")).map(_.elements().asScala.toSeq)
-        .getOrElse(Nil).map { c =>
-          JobConfig.CheckConf(str(c, "id"), str(c, "kind"),
-            str(c, "base", Some("")),
-            Option(c.get("compareMetric")).map(_.asText),
-            Option(c.get("threshold")).map(_.asDouble),
-            Option(c.get("formula")).map(_.asText),
-            Option(c.get("critical")).exists(_.asBoolean))
-        },
+      checks = nodes(root, "checks").map(checkNode),
       checkpoint = str(root, "checkpoint"),
       trigger = str(root, "trigger", Some("availableNow")))
     val errs = validate(conf)
@@ -119,44 +100,14 @@ object StreamJobConfig {
     conf
   }
 
-  /** Cross-reference validation, ALL errors collected (mirrors
-    * [[JobConfig.validate]]) — without it a typo'd check `base` starts the
+  /** Cross-reference validation, ALL errors collected, with the batch
+    * validator's check rules — without it a typo'd check `base` starts the
     * query fine and then persists a Failure row per finalized window for a
     * metric that can never exist, instead of failing the config phase
     * (exit 2). */
-  private[config] def validate(c: Conf): Seq[String] = {
-    val errs = Seq.newBuilder[String]
-    def dup(ids: Seq[String], what: String): Unit =
-      ids.groupBy(identity).filter(_._2.size > 1).keys
-        .foreach(id => errs += s"duplicate $what id '$id'")
-    dup(c.metrics.map(_.id), "metric")
-    dup(c.checks.map(_.id), "check")
-    val metricIds = c.metrics.map(_.id).toSet
-    c.checks.filter(ch => ch.kind.toUpperCase != "EXPRESSION" && !metricIds(ch.base))
-      .foreach(ch => errs += s"check '${ch.id}' references unknown metric '${ch.base}'")
-    c.checks.filter(ch => ch.kind.toUpperCase != "EXPRESSION" &&
-        ch.compareMetric.isEmpty && ch.threshold.isEmpty)
-      .foreach(ch => errs += s"check '${ch.id}' needs compareMetric or threshold")
-    // parity with JobConfig.validate (ADVICE r5): these two rules were
-    // batch-only, so a bad stream config passed validation and died later
-    // with ONE exception from inside start() — after the schema-bootstrap
-    // read — defeating the collect-ALL-errors contract above
-    c.checks.filter(ch => ch.kind.toUpperCase == "DIFFER_BY_LT" &&
-        (ch.compareMetric.isEmpty || ch.threshold.isEmpty))
-      .foreach(ch => errs += s"DIFFER_BY_LT check '${ch.id}' needs BOTH compareMetric and threshold")
-    c.checks.filter(ch => ch.kind.toUpperCase == "EXPRESSION" && ch.formula.isEmpty)
-      .foreach(ch => errs += s"expression check '${ch.id}' needs a formula")
-    c.checks.flatMap(ch => ch.compareMetric.map(ch.id -> _))
-      .filterNot { case (_, cm) => metricIds(cm) }
-      .foreach { case (id, cm) =>
-        errs += s"check '$id' compareMetric references unknown metric '$cm'" }
-    val refRe = "\\{\\{\\s*([\\w.\\-]+)\\s*\\}\\}".r
-    c.checks.flatMap(ch => ch.formula.map(ch.id -> _)).foreach { case (id, f) =>
-      refRe.findAllMatchIn(f).map(_.group(1)).filterNot(metricIds)
-        .foreach(ref => errs += s"formula of '$id' references unknown metric '$ref'")
-    }
-    errs.result()
-  }
+  private[config] def validate(c: Conf): Seq[String] =
+    JobConfig.duplicates(c.metrics.map(_.id), "metric") ++
+      JobConfig.checkErrors(c.checks, c.metrics.map(_.id).toSet)
 
   private def trigger(c: Conf): Trigger = c.trigger.split(":", 2) match {
     case Array("availableNow") => Trigger.AvailableNow()
@@ -220,18 +171,9 @@ object StreamJobConfig {
       case Some(st) =>
         // reference stream shape: per finalized window, run the checks and
         // persist metrics+checks to DQ storage (DQStreamWindowJob)
-        val dqStorage: graft.storage.DqStorage = st.kind.toLowerCase match {
-          case "parquet" => new graft.storage.ParquetDqStorage(spark, st.location)
-          case "jdbc" => new graft.storage.JdbcDqStorage(st.location)
-          case other => throw new IllegalArgumentException(
-            s"unknown storage kind '$other'")
-        }
-        val parsed = c.checks.map(JobConfig.check)
         StreamMetrics.runChecksSink(windowed, rowMetrics,
-          parsed.collect { case Left(cs) => cs },
-          dqStorage, c.jobId, c.checkpoint,
-          expressionChecks = parsed.collect { case Right(es) => es },
-          trigger = trigger(c), queryName = c.jobId).start()
+          c.checks.map(JobConfig.check), JobConfig.storage(spark, st),
+          c.jobId, c.checkpoint, trigger = trigger(c), queryName = c.jobId).start()
       case None =>
         StreamMetrics.start(windowed, c.checkpoint,
           sinkPath = c.sinkPath, queryName = c.jobId,

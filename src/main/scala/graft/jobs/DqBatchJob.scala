@@ -23,8 +23,7 @@ object Tolerance {
   case object All extends Tolerance
 }
 
-final case class CheckSpec(check: SnapshotCheck, critical: Boolean = false)
-final case class ExpressionCheckSpec(check: ExpressionCheck, critical: Boolean = false)
+final case class CheckSpec(check: Check, critical: Boolean = false)
 
 final case class JobResult(
     jobId: String,
@@ -38,6 +37,8 @@ final case class JobResult(
   * metrics per source → trend metrics (storage history) → composed metrics
   * (driver formula) → checks → persist. Only the metric and persist steps
   * touch executors; everything else is driver-side on 1-row results.
+  * `checks` holds every [[graft.checks.Check]], snapshot and expression
+  * alike; they run in the order given, and so do their results.
   *
   * Concurrency: sources are processed one after another, but within a
   * source the fused row pass and every grouping set's job run at once
@@ -64,7 +65,6 @@ final class DqBatchJob(
     composedMetrics: Seq[ComposedMetric] = Nil,
     trendMetrics: Seq[(String, TrendMetrics.Model, TrendMetrics.WindowRule)] = Nil,
     checks: Seq[CheckSpec] = Nil,
-    expressionChecks: Seq[ExpressionCheckSpec] = Nil,
     storage: Option[DqStorage] = None,
     tolerance: Tolerance = Tolerance.Critical,
     errorDumpSize: Int = 100,
@@ -110,12 +110,11 @@ final class DqBatchJob(
 
     // 5. checks
     val checkResults: Seq[(CheckResult, Boolean)] =
-      (checks.map(cs => (cs.check.run(allMetrics), cs.critical)) ++
-        expressionChecks.map(cs => (cs.check.run(allMetrics), cs.critical)))
-        .map { case (r, crit) =>
-          (annotations.get(r.checkId).fold(r) { case (d, md) =>
-            r.copy(description = d, metadata = md) }, crit)
-        }
+      checks.map { cs =>
+        val r = cs.check.run(allMetrics)
+        (annotations.get(r.checkId).fold(r) { case (d, md) =>
+          r.copy(description = d, metadata = md) }, cs.critical)
+      }
 
     // 6. persist — check results carry their criticality (ref V1.7),
     // capped error dumps become queryable history (ref V1.4)

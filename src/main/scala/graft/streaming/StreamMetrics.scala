@@ -131,9 +131,10 @@ object StreamMetrics {
     *
     * Each finalized window becomes a batch-job-shaped unit: metric columns
     * decode back to [[graft.metrics.MetricResult]]s, the configured checks
-    * run against them, and both persist to storage with referenceTs =
-    * window start. The per-batch collect is bounded by the number of
-    * finalized windows (1-row-per-window aggregates — the same
+    * (the same [[graft.jobs.CheckSpec]]s a batch job runs, expression
+    * checks included) run against them, and both persist to storage with
+    * referenceTs = window start. The per-batch collect is bounded by the
+    * number of finalized windows (1-row-per-window aggregates — the same
     * driver-side footprint as the reference's window thread).
     *
     * Delivery: `foreachBatch` is AT-LEAST-ONCE on crash replay, so the
@@ -157,7 +158,6 @@ object StreamMetrics {
       storage: graft.storage.DqStorage,
       jobId: String,
       checkpointDir: String,
-      expressionChecks: Seq[graft.jobs.ExpressionCheckSpec] = Nil,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       queryName: String = "graft_stream_checks"): DataStreamWriter[Row] =
     windowed.writeStream
@@ -183,9 +183,7 @@ object StreamMetrics {
               graft.metrics.MetricResult(m.id, m.name, jobId, m.columns, v, add)
             }
             val checkResults =
-              checks.map(cs => cs.check.run(results).copy(critical = cs.critical)) ++
-                expressionChecks.map(cs =>
-                  cs.check.run(results).copy(critical = cs.critical))
+              checks.map(cs => cs.check.run(results).copy(critical = cs.critical))
             storage.saveMetrics(jobId, ts, results)
             storage.saveChecks(jobId, ts, checkResults)
           }

@@ -165,4 +165,21 @@ class CurationJobConfigSpec extends AnyFunSuite with Matchers {
     r.kept shouldBe want
     r.files shouldBe spark.read.parquet(srcPath).count()
   }
+
+  test("jdbc metrics storage (embedded Derby) stores the keep-rate metrics") {
+    System.setProperty("derby.system.home",
+      Files.createTempDirectory("derby-home").toString)
+    val url = "jdbc:derby:memory:graftcuration"
+    val tmp = Files.createTempDirectory("graft-curjob-jdbc").toString
+    val conf = CurationJobConfig.parse(jsonConf(s"$tmp/kept", s"$url;create=true")
+      .replace(""""kind": "parquet", "location"""", """"kind": "jdbc", "location""""))
+    conf.metricsStorage.map(_.kind) shouldBe Some("jdbc")
+    val result = CurationJobConfig.run(spark, conf)
+    val storage = new graft.storage.JdbcDqStorage(url)
+    try {
+      storage.metricHistory("curate_docs", "curate_docs_keep_rate",
+        java.time.Instant.parse("2100-01-01T00:00:00Z"))
+        .map(_.value) shouldBe Seq(result.kept.toDouble / result.files)
+    } finally storage.close()
+  }
 }

@@ -361,4 +361,52 @@ class JobConfigSpec extends AnyFunSuite with Matchers {
     errs.exists(_.contains("DIFFER_BY_LT check 'k1' needs BOTH")) shouldBe true
     errs.exists(_.contains("expression check 'k2' needs a formula")) shouldBe true
   }
+
+  test("a check whose compareMetric names no metric is a validation error") {
+    // the failed lookup would fall back to the threshold and pass the check
+    val bad =
+      """{
+        "jobId": "cm",
+        "sources": [{"id": "s1", "kind": "parquet", "path": "/data/t.parquet"}],
+        "metrics": [{"id": "rows", "name": "ROW_COUNT", "source": "s1"}],
+        "checks": [{"id": "k1", "kind": "LESS_THAN", "base": "rows",
+                    "compareMetric": "rowz", "threshold": 1e9}]
+      }"""
+    JobConfig.validate(JobConfig.parse(bad)) shouldBe
+      Seq("check 'k1' compareMetric references unknown metric 'rowz'")
+    val ex = intercept[IllegalArgumentException] {
+      JobConfig.build(spark, JobConfig.parse(bad))
+    }
+    ex.getMessage should include("unknown metric 'rowz'")
+  }
+
+  test("metric and check nodes parse alike through the batch and stream readers") {
+    val metric =
+      """{"id": "rows", "name": "ROW_COUNT", "source": "stream", "columns": [],
+         "params": {"k": "v"}, "description": "total rows", "metadata": "team=dq"}"""
+    val check =
+      """{"id": "c1", "kind": "GREATER_THAN", "base": "rows", "threshold": 1.0,
+         "critical": true, "description": "rows sanity", "metadata": "tier=1"}"""
+    val batch = JobConfig.parse(
+      s"""{"jobId": "j", "metrics": [$metric], "checks": [$check]}""")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val stream = StreamJobConfig.parseTree(mapper.readTree(
+      s"""{"jobId": "j", "source": {"kind": "parquet", "path": "/p"},
+         "window": {"tsCol": "ts", "duration": "10 minutes", "watermark": "5 minutes"},
+         "metrics": [$metric], "checks": [$check],
+         "storage": {"kind": "parquet", "location": "/dq"}, "checkpoint": "/cp"}"""))
+    stream.metrics shouldBe batch.metrics
+    stream.checks shouldBe batch.checks
+    stream.metrics.head.description shouldBe Some("total rows")
+    stream.checks.head.metadata shouldBe Some("tier=1")
+  }
+
+  test("DQ storage and JSON field readers have one home: JobConfig") {
+    val home = Set("graft/config/JobConfig.scala")
+    val storage = """new\s+(?:graft\.storage\.)?(?:Parquet|Jdbc)DqStorage\b""".r
+    val copies = graft.MainSources.offenders(storage, home)
+      .filter(o => o.startsWith("graft/config/") || o.startsWith("graft/apps/")) ++
+      graft.MainSources.offenders("""\bdef\s+str\s*\(""".r, home)
+    copies shouldBe empty
+  }
 }

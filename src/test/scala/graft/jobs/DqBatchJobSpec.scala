@@ -39,9 +39,8 @@ class DqBatchJobSpec extends AnyFunSuite with Matchers {
       checks = Seq(
         CheckSpec(GreaterThanCheck("ck_rows", "rows", threshold = Some(100.0)), critical = true),
         CheckSpec(LessThanCheck("ck_fail", "rows",
-          threshold = Some(if (critFails) 1.0 else 1e9)), critical = critFails)),
-      expressionChecks = Seq(
-        ExpressionCheckSpec(ExpressionCheck("ck_expr", "{{ qty_x2 }} > {{ avg_qty }}"))),
+          threshold = Some(if (critFails) 1.0 else 1e9)), critical = critFails),
+        CheckSpec(ExpressionCheck("ck_expr", "{{ qty_x2 }} > {{ avg_qty }}"))),
       storage = Some(storage))
 
     // run 1: all pass
