@@ -75,6 +75,7 @@ object CurationJobConfig {
     if (c.sourcePath.isEmpty) errs += "source.path must be non-empty"
     if (c.idCols.isEmpty) errs += "idCols must be non-empty"
     if (c.rules.isEmpty) errs += "at least one mix rule is required"
+    errs ++= c.metricsStorage.toSeq.flatMap(JobConfig.storageErrors)
     val dupT = c.taggers.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     dupT.foreach(n => errs += s"duplicate tagger name '$n'")
     val dupR = c.rules.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
@@ -104,8 +105,15 @@ object CurationJobConfig {
       referenceTs: java.time.Instant = java.time.Instant.EPOCH): CurationRunResult = {
     val errs = validate(c)
     require(errs.isEmpty, s"invalid curation config: ${errs.mkString("; ")}")
-    // built before the pass, so an unknown storage kind fails up front
+    // built before the pass, so an unreachable storage fails up front;
+    // closed when the run ends
     val storage = c.metricsStorage.map(JobConfig.storage(spark, _))
+    def go = runWith(spark, c, storage, referenceTs)
+    storage.fold(go)(_.withinRun(go))
+  }
+
+  private def runWith(spark: SparkSession, c: Conf, storage: Option[graft.storage.DqStorage],
+      referenceTs: java.time.Instant): CurationRunResult = {
     // make the compiled signal functions available to config tagger SQL
     // (e.g. "code_stats(lang, content).comment_line_frac",
     // "secret_stats(content).n_flagged") without host-side setup — but

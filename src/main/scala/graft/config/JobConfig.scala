@@ -10,7 +10,7 @@ import graft.checks._
 import graft.jobs._
 import graft.metrics._
 import graft.sources.{Source, SourceReaders}
-import graft.storage.{DqStorage, JdbcDqStorage, ParquetDqStorage}
+import graft.storage.{DqStorage, JdbcDqStorage, ParquetDqStorage, RunScopedStorage}
 
 /** Declarative job configuration — the reference's primary UX is a config
   * file describing sources, metrics, checks, storage and targets (HOCON
@@ -92,13 +92,25 @@ object JobConfig {
   private[graft] def storageNode(s: JsonNode): StorageConf =
     StorageConf(str(s, "kind"), str(s, "location"))
 
-  /** The one place DQ storage is built from config. */
-  private[graft] def storage(spark: SparkSession, s: StorageConf): DqStorage =
-    s.kind.toLowerCase match {
-      case "parquet" => new ParquetDqStorage(spark, s.location)
-      case "jdbc" => new JdbcDqStorage(s.location)
-      case other => throw new IllegalArgumentException(s"unknown storage kind '$other'")
-    }
+  /** The storage kinds a config may name, each with its builder. */
+  private val storageKinds: Map[String, (SparkSession, String) => DqStorage] = Map(
+    "parquet" -> ((spark, location) => new ParquetDqStorage(spark, location)),
+    "jdbc" -> ((_, location) => new JdbcDqStorage(location)))
+
+  /** The validation error of a storage node naming no known kind. */
+  private[graft] def storageErrors(s: StorageConf): Seq[String] =
+    if (storageKinds.contains(s.kind.toLowerCase)) Nil
+    else Seq(s"unknown storage kind '${s.kind}' " +
+      s"(${storageKinds.keys.toSeq.sorted.mkString("|")})")
+
+  /** The one place DQ storage is built from config. Every run that uses it
+    * closes it when it ends, and the next run opens it again
+    * ([[RunScopedStorage]]). */
+  private[graft] def storage(spark: SparkSession, s: StorageConf): DqStorage = {
+    val build = storageKinds.getOrElse(s.kind.toLowerCase,
+      throw new IllegalArgumentException(storageErrors(s).mkString))
+    new RunScopedStorage(() => build(spark, s.location))
+  }
 
   /** Phase 1: parse the JSON shape. Throws IllegalArgumentException with a
     * precise message on malformed input (ref: PreValidation). */
@@ -152,6 +164,7 @@ object JobConfig {
     val metricIds = (c.metrics.map(_.id) ++ c.composed.map(_.id)).toSet
     c.composed.foreach(cc => errs ++= unknownRefs(cc.id, cc.formula, metricIds))
     errs ++= checkErrors(c.checks, metricIds)
+    errs ++= c.storage.toSeq.flatMap(storageErrors)
     errs.result()
   }
 

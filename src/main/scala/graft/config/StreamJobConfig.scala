@@ -107,7 +107,8 @@ object StreamJobConfig {
     * (exit 2). */
   private[config] def validate(c: Conf): Seq[String] =
     JobConfig.duplicates(c.metrics.map(_.id), "metric") ++
-      JobConfig.checkErrors(c.checks, c.metrics.map(_.id).toSet)
+      JobConfig.checkErrors(c.checks, c.metrics.map(_.id).toSet) ++
+      c.storage.toSeq.flatMap(JobConfig.storageErrors)
 
   private def trigger(c: Conf): Trigger = c.trigger.split(":", 2) match {
     case Array("availableNow") => Trigger.AvailableNow()

@@ -50,6 +50,10 @@ final case class JobResult(
   * sequential order. A [[graft.storage.DqStorage]] must therefore accept
   * concurrent saves.
   *
+  * Every run goes through `storage.withinRun`, failed runs included: a
+  * storage built from config closes its connection when the last run
+  * using it ends, and one the caller passed in stays open.
+  *
   * A failed persist is not atomic across the four writes: `run` throws the
   * first failure, but any of the other writes that ran (job state and
   * check rows included, even when `saveMetrics` failed) stay committed, so
@@ -77,6 +81,11 @@ final class DqBatchJob(
     annotations: Map[String, (Option[String], Option[String])] = Map.empty) {
 
   def run(referenceTs: Instant = Instant.now()): JobResult = {
+    def go = runSteps(referenceTs)
+    storage.fold(go)(_.withinRun(go))
+  }
+
+  private def runSteps(referenceTs: Instant): JobResult = {
     val srcById = sources.map(s => s.id -> s).toMap
 
     // 1. load checks (schema-only)

@@ -30,15 +30,23 @@ final case class MetricResult(
   * re-expressed Spark-first): the metric contributes
   *  - `result`: ONE aggregate `Column` — all metrics for a source are fused
   *    into a single `df.select(m1.result, m2.result, ...)` so Spark performs
-  *    exactly one scan and one partial+final HashAggregate regardless of how
+  *    exactly one scan and one partial+final aggregate regardless of how
   *    many metrics are requested;
   *  - `errorCondition`: an optional per-row predicate; matching rows' key
   *    fields + metric columns are collected via the bounded
   *    `collect_list_limit` aggregate (never an unbounded collect).
   *
-  * Implementations must build `result` out of codegen-friendly
-  * `org.apache.spark.sql.functions` so the whole fused pass stays inside
-  * WholeStageCodegen.
+  * The aggregate is a code-generated HashAggregate only while every metric
+  * is declarative. Once an error dump or a sketch (HLL, quantiles, TOP_N)
+  * joins, it is an ObjectHashAggregate, which has no whole-stage code: the
+  * declarative updates still run through one generated projection, but the
+  * inputs of the dumps and sketches (a dump's condition and payload, a
+  * sketch's value) are evaluated interpreted, row by row, through
+  * `Expression.eval`. A per-row kernel such as `TryCastDouble` or
+  * `TryToDate` therefore needs an `eval` as cheap as its generated code,
+  * or it runs at interpreted speed in exactly the metrics that dump.
+  * Identical aggregate expressions are computed once, so metrics that can
+  * share a sketch build the same one (see [[QuantileMetric]]).
   */
 trait RowMetric extends Serializable {
   /** Unique id of this metric instance (user-assigned). */

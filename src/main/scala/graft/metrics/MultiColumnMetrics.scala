@@ -3,6 +3,8 @@ package graft.metrics
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.TryToDate
+
 /** CO_MOMENT / COVARIANCE / COVARIANCE_BESSEL over exactly two columns
   * (ref: MultiColumnDFMetrics.scala:70-246). The reference adds a custom
   * `comoment` aggregate (CoMoment.scala:18-34) returning the unnormalized ck;
@@ -54,15 +56,15 @@ final case class ColumnEqMetric(id: String, columns: Seq[String]) extends RowMet
 }
 
 /** DAY_DISTANCE — rows where |datediff(a, b)| < threshold days, both parsed
-  * with `format` (ref: MultiColumnDFMetrics.scala:298-329). */
+  * to dates with `format` by [[TryToDate]]
+  * (ref: MultiColumnDFMetrics.scala:298-329). */
 final case class DayDistanceMetric(id: String, a: String, b: String,
     threshold: Int, format: String = "yyyy-MM-dd") extends RowMetric {
   val name = "DAY_DISTANCE"
   val columns = Seq(a, b)
   private def within: Column =
-    abs(datediff(
-      try_to_timestamp(col(a).cast("string"), lit(format)),
-      try_to_timestamp(col(b).cast("string"), lit(format)))) < threshold
+    abs(datediff(TryToDate(col(a).cast("string"), format),
+      TryToDate(col(b).cast("string"), format))) < threshold
   def result: Column = sum(when(within, 1L).otherwise(0L)).cast("double").as(id)
   override def errorCondition: Option[Column] = Some(!coalesce(within, lit(false)))
 }

@@ -116,7 +116,12 @@ final case class NumberBetweenMetric(id: String, columns: Seq[String],
   * Spark's built-in `percentile_approx` (Greenwald-Khanna) provides the same
   * capability as a mergeable single-pass sketch — exact whenever the number
   * of distinct values fits in `accuracy` (ref mapping:
-  * BasicNumericDFMetrics.scala:15-138). */
+  * BasicNumericDFMetrics.scala:15-138).
+  *
+  * Every quantile metric asks the sketch for the three quartiles (plus its
+  * own target when that is another one) and takes its element, so the
+  * quartile metrics of one column and accuracy build one identical
+  * aggregate, which Spark computes once: one sketch per column. */
 final case class QuantileMetric(id: String, column: String, quantile: Double,
     accuracy: Int = 10000) extends RowMetric {
   require(quantile >= 0 && quantile <= 1, s"quantile must be in [0,1]: $quantile")
@@ -127,9 +132,15 @@ final case class QuantileMetric(id: String, column: String, quantile: Double,
     case _    => "GET_QUANTILE"
   }
   val columns = Seq(column)
-  def result: Column =
-    percentile_approx(TryCastDouble(col(column)), lit(quantile), lit(accuracy))
-      .cast("double").as(id)
+  def result: Column = {
+    val targets = (QuantileMetric.Quartiles :+ quantile).distinct
+    percentile_approx(TryCastDouble(col(column)), lit(targets.toArray), lit(accuracy))
+      .getItem(targets.indexOf(quantile)).cast("double").as(id)
+  }
+}
+
+object QuantileMetric {
+  val Quartiles: Seq[Double] = Seq(0.25, 0.5, 0.75)
 }
 
 /** GET_PERCENTILE — CDF at a value: exact share of non-null values ≤ v.

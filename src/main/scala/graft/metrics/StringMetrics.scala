@@ -3,6 +3,8 @@ package graft.metrics
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.TryToDate
+
 /** Shared shape for "count rows/cells satisfying a predicate" metrics —
   * `sum(when(cond(col), 1) ...)` folded over the metric's columns
   * (reference: .../metrics/df/ConditionalDFCalculator.scala:40-56).
@@ -121,12 +123,13 @@ final case class AvgStringLenMetric(id: String, columns: Seq[String]) extends Ro
 }
 
 /** FORMATTED_DATE — count of values parseable with a datetime pattern
-  * (ref: BasicStringDFMetrics.scala:403-438). */
+  * (ref: BasicStringDFMetrics.scala:403-438). A value counts iff
+  * `try_to_timestamp(value, format)` is not null; [[TryToDate]] reads
+  * date-only patterns from the bytes. */
 final case class FormattedDateMetric(id: String, columns: Seq[String],
     format: String = "yyyy-MM-dd HH:mm:ss") extends ConditionalMetric {
   val name = "FORMATTED_DATE"
-  protected def cond(c: Column): Column =
-    try_to_timestamp(c.cast("string"), lit(format)).isNotNull
+  protected def cond(c: Column): Column = TryToDate(c.cast("string"), format).isNotNull
 }
 
 sealed trait CompareRule

@@ -42,6 +42,55 @@ trait DqStorage {
   def saveJobState(jobId: String, referenceTs: Instant, config: String): Unit
   /** The most recent stored config at-or-before `at`, if any. */
   def latestJobState(jobId: String, at: Instant): Option[String]
+  /** Runs `body`, one job run's use of this storage. A storage the caller
+    * built and passed in stays open (this default); one built from config
+    * ([[RunScopedStorage]]) closes what it opened when the last run that
+    * uses it ends. */
+  def withinRun[T](body: => T): T = body
+}
+
+/** A storage built from config: `open` builds the real one at once, so a
+  * bad location fails when the job is built, and again on the first call
+  * after the runs ended. When the last of the runs in [[withinRun]] ends it
+  * is closed, so a long-lived host (the API server, a driver running many
+  * jobs) holds no JDBC connection between runs, and two runs of one job at
+  * once share one connection. */
+private[graft] final class RunScopedStorage(open: () => DqStorage) extends DqStorage {
+  private var current: Option[DqStorage] = Some(open())
+  private var runs = 0
+
+  private def st: DqStorage = synchronized {
+    current.getOrElse { val s = open(); current = Some(s); s }
+  }
+
+  private[graft] def isOpen: Boolean = synchronized(current.isDefined)
+
+  override def withinRun[T](body: => T): T = {
+    synchronized(runs += 1)
+    try body
+    finally synchronized {
+      runs -= 1
+      if (runs == 0) {
+        current.foreach { case c: AutoCloseable => c.close(); case _ => }
+        current = None
+      }
+    }
+  }
+
+  def saveMetrics(jobId: String, referenceTs: Instant, results: Seq[MetricResult]): Unit =
+    st.saveMetrics(jobId, referenceTs, results)
+  def saveChecks(jobId: String, referenceTs: Instant, checks: Seq[CheckResult]): Unit =
+    st.saveChecks(jobId, referenceTs, checks)
+  def metricHistory(jobId: String, metricId: String, before: Instant): Seq[HistoryPoint] =
+    st.metricHistory(jobId, metricId, before)
+  def saveMetricErrors(jobId: String, referenceTs: Instant, results: Seq[MetricResult]): Unit =
+    st.saveMetricErrors(jobId, referenceTs, results)
+  def metricErrors(jobId: String, metricId: String, before: Instant): Seq[String] =
+    st.metricErrors(jobId, metricId, before)
+  def saveJobState(jobId: String, referenceTs: Instant, config: String): Unit =
+    st.saveJobState(jobId, referenceTs, config)
+  def latestJobState(jobId: String, at: Instant): Option[String] =
+    st.latestJobState(jobId, at)
 }
 
 /** Each save writes its rows as ONE parquet file (`coalesce(1)`): the rows

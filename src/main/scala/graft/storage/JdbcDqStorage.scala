@@ -266,6 +266,8 @@ final class JdbcDqStorage(url: String,
     } finally ps.close()
   }
 
+  private[graft] def isClosed: Boolean = conn.isClosed
+
   override def close(): Unit = locked {
     try conn.rollback() catch { case _: java.sql.SQLException => }
     conn.close()

@@ -175,7 +175,8 @@ object StreamMetrics {
         // partition (required even when the persist below is skipped), and
         // is bounded at 1 row per finalized window either way
         val finalized = batch.collect()
-        if (!alreadyPersisted) {
+        // each micro-batch is one run of the storage
+        if (!alreadyPersisted) storage.withinRun {
           finalized.foreach { row =>
             val ts = row.getAs[java.sql.Timestamp]("window_start").toInstant
             val results = metrics.map { m =>

@@ -80,6 +80,16 @@ class DqApiServerSpec extends AnyFunSuite with Matchers {
       cbadBody should include(""""valid":false""")
       cbadBody should include("does not parse")
 
+      // a storage kind no builder knows fails validation on both routes
+      val (_, fooJob) = post(s"$base/api/jobs/validate",
+        good.dropRight(1) + ""","storage":{"kind":"foo","location":"/tmp/x"}}""")
+      fooJob should include(""""valid":false""")
+      fooJob should include("unknown storage kind 'foo'")
+      val (_, fooCur) = post(s"$base/api/curation/validate",
+        curGood.dropRight(1) + ""","metricsStorage":{"kind":"foo","location":"/tmp/x"}}""")
+      fooCur should include(""""valid":false""")
+      fooCur should include("unknown storage kind 'foo'")
+
       val (hCode, hBody) = get(
         s"$base/api/storage/metrics/history?jobId=job1&metricId=m1")
       hCode shouldBe 200

@@ -182,4 +182,11 @@ class CurationJobConfigSpec extends AnyFunSuite with Matchers {
         .map(_.value) shouldBe Seq(result.kept.toDouble / result.files)
     } finally storage.close()
   }
+
+  test("an unknown metrics storage kind is a validation error") {
+    val conf = CurationJobConfig.parse(jsonConf("/tmp/kept", "/tmp/dq")
+      .replace(""""kind": "parquet", "location"""", """"kind": "foo", "location""""))
+    CurationJobConfig.validate(conf) shouldBe
+      Seq("unknown storage kind 'foo' (jdbc|parquet)")
+  }
 }

@@ -409,4 +409,13 @@ class JobConfigSpec extends AnyFunSuite with Matchers {
       graft.MainSources.offenders("""\bdef\s+str\s*\(""".r, home)
     copies shouldBe empty
   }
+
+  test("an unknown storage kind is a validation error, named with the known kinds") {
+    val conf = JobConfig.parse(goodJson.replace(""""errorDumpSize": 50""",
+      """"errorDumpSize": 50, "storage": {"kind": "foo", "location": "/tmp/x"}"""))
+    JobConfig.validate(conf) shouldBe
+      Seq("unknown storage kind 'foo' (jdbc|parquet)")
+    JobConfig.validate(conf.copy(storage = conf.storage.map(_.copy(kind = "JDBC")))) shouldBe
+      empty
+  }
 }

@@ -109,6 +109,52 @@ class DqBatchJobSpec extends AnyFunSuite with Matchers {
     } finally storage.close()
   }
 
+  test("a JDBC storage built from config is closed when each run ends, a passed-in one is not") {
+    import graft.config.JobConfig
+    import graft.storage.{JdbcDqStorage, RunScopedStorage}
+    System.setProperty("derby.system.home",
+      Files.createTempDirectory("derby-home").toString)
+    val url = "jdbc:derby:memory:graftdqscoped;create=true"
+    val t0 = Instant.parse("2026-08-01T00:00:00Z")
+    def job(st: graft.storage.DqStorage) = new DqBatchJob(spark, "scoped", Seq(src),
+      rowMetrics = Map("lineitem" -> Seq(RowCountMetric("rows"))), storage = Some(st))
+
+    val opened = scala.collection.mutable.Buffer.empty[JdbcDqStorage]
+    val scoped = new RunScopedStorage(() => { opened += new JdbcDqStorage(url); opened.last })
+    job(scoped).run(t0)
+    scoped.isOpen shouldBe false
+    job(scoped).run(t0.plusSeconds(86400))
+    opened should have size 2
+    opened.map(_.isClosed) shouldBe Seq(true, true)
+    // a run that ends while another is still going leaves the storage open
+    scoped.withinRun {
+      job(scoped).run(t0.plusSeconds(43200))
+      scoped.isOpen shouldBe true
+    }
+    scoped.isOpen shouldBe false
+    opened.map(_.isClosed) shouldBe Seq(true, true, true)
+
+    // the config factory builds the same kind of storage, and a config job
+    // run twice in one JVM stores both runs
+    JobConfig.storage(spark, JobConfig.StorageConf("jdbc", url)) shouldBe a[RunScopedStorage]
+    val conf = JobConfig.parse(
+      s"""{"jobId": "scoped", "sources": [{"id": "lineitem", "kind": "parquet",
+         |"path": "${src.df.inputFiles.head}"}],
+         |"metrics": [{"id": "rows", "name": "ROW_COUNT", "source": "lineitem"}],
+         |"storage": {"kind": "jdbc", "location": "$url"}}""".stripMargin)
+    val fromConfig = JobConfig.build(spark, conf)
+    fromConfig.run(t0.plusSeconds(2 * 86400))
+    fromConfig.run(t0.plusSeconds(3 * 86400))
+
+    val passedIn = new JdbcDqStorage(url)
+    try {
+      job(passedIn).run(t0.plusSeconds(4 * 86400))
+      passedIn.isClosed shouldBe false
+      passedIn.metricHistory("scoped", "rows", t0.plusSeconds(5 * 86400))
+        .map(_.value) shouldBe Seq.fill(6)(6000.0)
+    } finally passedIn.close()
+  }
+
   test("tolerance modes") {
     val base = new DqBatchJob(spark, "t", Seq(src),
       rowMetrics = Map("lineitem" -> Seq(RowCountMetric("rows"))),

@@ -430,4 +430,68 @@ class MetricProcessorSpec extends AnyFunSuite with Matchers {
     numDf.select(TryCastDouble(col("n1"))).queryExecution.optimizedPlan
       .expressions.exists(_.exists(_.isInstanceOf[MayCastToDouble])) shouldBe false
   }
+
+  test("date metrics dump the rows the try_to_timestamp metrics dumped") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{abs, coalesce, col, datediff, lit, sum, try_to_timestamp, when}
+    // the metrics as they were before the byte kernel, parse for parse
+    final case class ParseFormattedDate(id: String, columns: Seq[String], format: String)
+        extends ConditionalMetric {
+      val name = "FORMATTED_DATE"
+      protected def cond(c: Column): Column =
+        try_to_timestamp(c.cast("string"), lit(format)).isNotNull
+    }
+    final case class ParseDayDistance(id: String, a: String, b: String, threshold: Int,
+        format: String) extends RowMetric {
+      val name = "DAY_DISTANCE"
+      val columns = Seq(a, b)
+      private def within: Column = abs(datediff(
+        try_to_timestamp(col(a).cast("string"), lit(format)),
+        try_to_timestamp(col(b).cast("string"), lit(format)))) < threshold
+      def result: Column = sum(when(within, 1L).otherwise(0L)).cast("double").as(id)
+      override def errorCondition: Option[Column] = Some(!coalesce(within, lit(false)))
+    }
+    val malformed = Seq("1995-13-45", "1995-02-29", "0000-01-01", " 1995-01-01",
+      "1995-1-01", "", null)
+    val df = (malformed ++ Seq("1995-01-01", "1995-03-01", "2000-02-29"))
+      .zipWithIndex.map { case (d, i) => (i.toLong, d, if (i % 2 == 0) "1995-01-10" else d) }
+      .toDF("k", "d", "e")
+    val cfg = MetricProcessor.Config(keyFields = Seq("k"))
+    val got = MetricProcessor.processRowMetrics(df, Seq(
+      FormattedDateMetric("fd", Seq("d"), "yyyy-MM-dd"),
+      DayDistanceMetric("dd", "d", "e", 20)), cfg)
+    val want = MetricProcessor.processRowMetrics(df, Seq(
+      ParseFormattedDate("fd", Seq("d"), "yyyy-MM-dd"),
+      ParseDayDistance("dd", "d", "e", 20, "yyyy-MM-dd")), cfg)
+    got.map(r => (r.metricId, r.value, r.errors.toSet)) shouldBe
+      want.map(r => (r.metricId, r.value, r.errors.toSet))
+    // year 0000 parses (Spark reads yyyy as a proleptic year); the other
+    // six malformed values are dumped
+    got.head.errors.map(_.head).toSet shouldBe Set("0", "1", "3", "4", "5", "6")
+  }
+
+  test("the quartile metrics of one column share one percentile_approx") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.functions.{col, lit, percentile_approx}
+    val df = spark.range(0, 200000).select(((col("id") * 7919) % 100003).cast("double").as("x"))
+    val ms: Seq[RowMetric] = Seq(QuantileMetric("med", "x", 0.5),
+      QuantileMetric("q3", "x", 0.75), QuantileMetric("p90", "x", 0.9))
+    val frame = MetricProcessor.rowMetricsFrame(df, ms)
+    val aggs = frame.queryExecution.sparkPlan.collect { case a: BaseAggregateExec => a }
+    aggs should not be empty
+    // quartiles: one sketch; GET_QUANTILE 0.9 asks for its own array
+    aggs.foreach(_.aggregateExpressions
+      .count(_.aggregateFunction.isInstanceOf[ApproximatePercentile]) shouldBe 2)
+    val row = frame.head()
+    val scalar = df.select(Seq(0.5, 0.75, 0.9).map(q =>
+      percentile_approx(col("x"), lit(q), lit(10000)).cast("double")): _*).head()
+    (0 until 3).map(row.getDouble) shouldBe (0 until 3).map(scalar.getDouble)
+  }
+
+  test("no date parse call in the metrics outside the date kernel") {
+    graft.MainSources.offenders(
+      """\b(?:try_)?to_(?:timestamp|date)\b|\bParseTo(?:Timestamp|Date)\b""".r, Set.empty)
+      .filter(_.startsWith("graft/metrics/")) shouldBe empty
+  }
 }
